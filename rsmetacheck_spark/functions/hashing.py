@@ -1,103 +1,23 @@
-"""Cross-engine-portable hashing primitives for dedup/fingerprinting.
+"""MinHash/LSH parameters shared by the dedup queries and their oracles.
 
-Everything is built on md5-of-string -> lowercase hex, which Spark and
-DuckDB compute identically — so every dedup operator here has an exact
+Every dedup hash is built on md5-of-string -> lowercase hex, which Spark
+and DuckDB compute identically — so every dedup operator has an exact
 ANSI-SQL oracle (the driver's DuckDB correctness gate). xxhash64/murmur are
 Spark-private and deliberately avoided in result-bearing columns; they are
 still fine for *internal* salting (thresholds.N_SALT) where the value never
 reaches output.
 
-Scale note: minhash signatures are fixed-width (NUM_HASHES small strings)
-per doc — the LSH band shuffle moves (band_key, doc_id) pairs only, never
-document text.
+Scale note: minhash signatures are fixed-width (NUM_HASHES integers) per
+doc — the LSH band shuffle moves (band_key, doc_id) pairs only, never
+document text. Consumers import these names at call time, so a tool may
+rebind them (tools/ab_dd02.py times other hash/band counts).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 NUM_HASHES = 128    # minhash permutations (production-scale: 128/16 bands
 NUM_BANDS = 16      # -> 8 rows/band, LSH threshold (1/16)^(1/8) ~= 0.71)
 ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
-SHINGLE_N = 3       # word-shingle width
-SIMHASH_BITS = 64   # first 16 hex chars of md5
 BAND_CAP = 100      # hot-band guard: a band bucket holding > BAND_CAP docs
                     # (a viral template) would go quadratic inside one key;
                     # such buckets are dropped, like dd03's DF<=100 guard
-
-
-def tokens(text: Column) -> Column:
-    """Canonical tokenization (same as perplexity.tokenize / rules.tokens)."""
-    return F.filter(F.split(F.lower(text), "[^a-z0-9]+"), lambda x: x != F.lit(""))
-
-
-def shingles(col_name: str, n: int = SHINGLE_N) -> Column:
-    """Distinct word n-grams as strings ([] for docs shorter than n —
-    Spark's sequence(1,0) is [1,0], never feed it to slice).
-
-    Built as nested zip_with over n shifted slices: HOF lambdas are
-    interpreted, and a transform(sequence, i -> slice(t, i, n)) form
-    copies O(len) array elements per position (O(len²) per doc) — the
-    zip_with form's per-element work is O(1) concat (measured 4× on the
-    sf0.1 trigram build)."""
-    width = f"size({col_name}) - {n - 1}"
-    expr = f"slice({col_name}, {n}, {width})"
-    for j in range(n - 1, 0, -1):
-        expr = (
-            f"zip_with(slice({col_name}, {j}, {width}), {expr},"
-            f" (a{j}, b{j}) -> concat(a{j}, ' ', b{j}))"
-        )
-    return F.expr(
-        f"CASE WHEN size({col_name}) >= {n} THEN array_distinct({expr})"
-        f" ELSE CAST(array() AS array<string>) END"
-    )
-
-
-def minhash_sig(shingle_col: str, num_hashes: int = NUM_HASHES) -> Column:
-    """array<string> minhash signature: sig[i] = min(md5(i || '|' || s))."""
-    return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}),"
-        f" i -> array_min(transform({shingle_col},"
-        f"   s -> md5(concat(cast(i as string), '|', s)))))"
-    )
-
-
-def band_keys(sig_col: str, num_bands: int = NUM_BANDS,
-              rows: int = ROWS_PER_BAND) -> Column:
-    """array<struct<band:int, key:string>> of LSH band bucket keys."""
-    return F.expr(
-        f"transform(sequence(0, {num_bands - 1}),"
-        f" b -> struct(b as band,"
-        f"   md5(concat_ws('|', slice({sig_col}, b * {rows} + 1, {rows}))) as key))"
-    )
-
-
-def simhash_hex(toks_col: str, bits: int = SIMHASH_BITS) -> Column:
-    """64-bit SimHash as a 16-char hex string, from per-token md5 bits.
-
-    Bit b of token t = (hexdigit(md5(t), b//4) >> (3 - b%4)) & 1, where
-    hexdigit is decoded via strpos over '0123456789abcdef' — portable to
-    DuckDB verbatim. Document bit = majority vote over distinct tokens.
-    """
-    # per-token 64-bit vector as array of ±1, summed over tokens, then sign
-    return F.expr(
-        f"""
-        concat_ws('', transform(sequence(0, {bits // 4 - 1}), nib ->
-          substr('0123456789abcdef',
-            1 + aggregate(sequence(0, 3), 0, (acc, bit) ->
-              acc + (case when (
-                aggregate(array_distinct({toks_col}), 0, (s, t) ->
-                  s + (case when
-                    ((strpos('0123456789abcdef',
-                       substr(md5(t), nib + 1, 1)) - 1) div
-                     (case bit when 0 then 8 when 1 then 4 when 2 then 2 else 1 end))
-                    % 2 = 1
-                  then 1 else -1 end)
-                ) > 0
-              ) then (case bit when 0 then 8 when 1 then 4 when 2 then 2 else 1 end)
-              else 0 end)
-            ), 1)
-        ))
-        """
-    )

@@ -66,21 +66,9 @@ def _tok_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"FROM (SELECT doc_id, unnest({toks}) AS tok FROM _b) "
         "GROUP BY doc_id, tok"
     )
-
-    def build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sql).fetch_arrow_table().to_batches()
-
     return _checkpoint(
-        d.mapInArrow(build, "doc_id long, tok string, c long"),
-        "tok_counts", key=f"tok_counts:{_sfkey(sf_dir)}",
+        _duckdb_map(d, sql, "doc_id long, tok string, c long"),
+        "tok_counts", sf_dir,
     )
 
 
@@ -146,8 +134,24 @@ def _sfkey(sf_dir: str) -> str:
     return "|".join(parts)
 
 
+def _ckpt_key(tag: str, sf: str, extra: tuple = ()) -> str:
+    """The one spelling of a scratch table's session cache key: its tag,
+    the sf dir's input fingerprint, and any parameter the table depends
+    on beyond its input (dd09's Bloom geometry)."""
+    return ":".join([tag, _sfkey(sf), *map(str, extra)])
+
+
+def _ckpt_path(tag: str, sf: str) -> str | None:
+    """Scratch dir of the keyed checkpoint `tag` for `sf` written in this
+    session, or None. For readers that load a scratch table outside a
+    Spark plan (the worker-side NumPy loaders) or skip work when it
+    already exists (dd06's CC loop)."""
+    return _CKPT_CACHE.get(_ckpt_key(tag, sf))
+
+
 def _checkpoint(
-    df: DataFrame, tag: str, key: str | None = None, rebalance: bool = False
+    df: DataFrame, tag: str, sf: str | None = None, extra: tuple = (),
+    rebalance: bool = False,
 ) -> DataFrame:
     """Materialize an intermediate to scratch parquet and read it back —
     the query-local analog of checkpointing to a bucketed scratch table.
@@ -156,15 +160,17 @@ def _checkpoint(
     and the exact pattern that survives 100 TB (shingle/signature tables
     don't fit in cluster RAM; a spill-safe columnar scratch table does).
 
-    `key` memoizes DETERMINISTIC intermediates within the session (e.g.
-    the dd02 shingle table per sf dir), so a downstream operator (dd06)
-    or a repeated bench run reuses the scratch table instead of
-    recomputing — the session-local analog of a named scratch dataset."""
+    Passing `sf` memoizes a DETERMINISTIC intermediate within the session
+    under _ckpt_key(tag, sf, extra) (e.g. the dd02 shingle table per sf
+    dir), so a downstream operator (dd06) or a repeated bench run reuses
+    the scratch table instead of recomputing — the session-local analog
+    of a named scratch dataset. Without `sf` every call writes afresh."""
     import atexit
     import shutil
     import tempfile
 
-    if key is not None and key in _CKPT_CACHE:
+    key = None if sf is None else _ckpt_key(tag, sf, extra)
+    if key in _CKPT_CACHE:
         return df.sparkSession.read.parquet(_CKPT_CACHE[key])
     path = tempfile.mkdtemp(prefix=f"rsmc_ckpt_{tag}_")
     atexit.register(shutil.rmtree, path, ignore_errors=True)
@@ -181,6 +187,26 @@ def _checkpoint(
     if key is not None:
         _CKPT_CACHE[key] = path
     return df.sparkSession.read.parquet(path)
+
+
+def _duckdb_map(df: DataFrame, sql: str, schema: str) -> DataFrame:
+    """Run `sql` in DuckDB over each Arrow batch of `df`, registered as
+    the table `_b`, inside mapInArrow (guide §4.2: a vectorized native
+    engine per batch beats interpreted Catalyst HOF lambdas). Map-only:
+    whatever `sql` aggregates is final only per batch."""
+
+    def build(batches):
+        import duckdb
+        import pyarrow as pa
+
+        con = duckdb.connect()
+        con.execute("SET threads TO 1")  # Spark owns the cores; an
+        # all-core pool per task oversubscribes 22 tasks x 32 threads
+        for b in batches:
+            con.register("_b", pa.Table.from_batches([b]))
+            yield from con.execute(sql).fetch_arrow_table().to_batches()
+
+    return df.mapInArrow(build, schema)
 
 
 def _dsum(col: str) -> F.Column:
@@ -381,7 +407,7 @@ def _doc_feats(spark: SparkSession, sf: str) -> DataFrame:
             "round(length(regexp_replace(lower(text), '[^a-z0-9]', '')) * 1.0"
             " / greatest(size(t), 1), 6) AS mean_word_len",
         ),
-        "doc_feats", key=f"doc_feats:{_sfkey(sf)}",
+        "doc_feats", sf,
     )
 
 
@@ -657,22 +683,37 @@ def _shingle_mat(spark: SparkSession, sf: str) -> DataFrame:
         f"SELECT doc_id, sh FROM (SELECT doc_id, {shexpr} AS sh FROM _b) "
         "WHERE len(sh) > 0"  # empty docs have no near-dup notion
     )
-
-    def build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sql).fetch_arrow_table().to_batches()
-
     return _checkpoint(
-        d.mapInArrow(build, "doc_id long, sh array<string>"),
-        "dd02_sh", key=f"dd02_sh:{_sfkey(sf)}",
+        _duckdb_map(d, sql, "doc_id long, sh array<string>"), "dd02_sh", sf
     )
+
+
+def _minhash_sql(key: str, key_type: str, unnest: bool) -> tuple[str, str]:
+    """(sql, schema) of the per-batch MinHash kernel for _duckdb_map:
+    NUM_HASHES affine-permutation MINs m0..m{NUM_HASHES-1} of every
+    shingle's md5->int hash, grouped by `key`. `unnest` says the batch
+    holds (key, sh) shingle ARRAYS rather than one shingle per row. The
+    md5->int expression is the oracle's own hv CTE (integer arithmetic,
+    bitwise-identical mins). NUM_HASHES is read per call so a tool that
+    rebinds it (tools/ab_dd02.py) builds matching signatures."""
+    from .functions.hashing import NUM_HASHES
+
+    src = f"(SELECT {key}, unnest(sh) AS sh FROM _b)" if unnest else "_b"
+    # hex -> int via DuckDB's 0x string cast: measured 4.7x faster
+    # than the strpos/list_sum emulation and value-identical
+    hexpr = "CAST(('0x' || substring(md5(sh), 1, 8)) AS BIGINT) % 2147483647"
+    min_exprs = ", ".join(
+        f"MIN(({2 * i + 1} * h + {1000003 * i + 12345}) % 2147483647) AS m{i}"
+        for i in range(NUM_HASHES)
+    )
+    sql = (
+        f"WITH hv AS (SELECT {key}, {hexpr} AS h FROM {src})"
+        f" SELECT {key}, {min_exprs} FROM hv GROUP BY {key}"
+    )
+    schema = f"{key} {key_type}, " + ", ".join(
+        f"m{i} long" for i in range(NUM_HASHES)
+    )
+    return sql, schema
 
 
 def _dd02_candidates(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
@@ -684,8 +725,8 @@ def _dd02_candidates(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame
     Classic minhash cost structure: ONE md5 per shingle -> 32-bit int,
     then NUM_HASHES cheap affine permutations (a_i*h + b_i) mod p. The
     permutation mins run as 128 DuckDB MIN aggregates per Arrow batch
-    (see the inline comment at sig_sql) — a map-only stage, since each
-    doc's shingles arrive as one row."""
+    (see the inline comment at the signature build) — a map-only stage,
+    since each doc's shingles arrive as one row."""
     from .functions.hashing import BAND_CAP, NUM_BANDS, NUM_HASHES, ROWS_PER_BAND
 
     mat = _shingle_mat(spark, sf)  # one checkpointed pass; 3 consumers below
@@ -694,37 +735,8 @@ def _dd02_candidates(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame
     # so a per-batch GROUP BY doc_id already yields the FINAL 128 mins —
     # the JVM explode + 128-MIN groupBy shuffled ~unreduced exploded
     # rows (one doc never spans two map partitions, so partial
-    # aggregation had nothing to combine). The md5->int expression is
-    # the oracle's own hv CTE (integer arithmetic, bitwise-identical
-    # mins); zero Exchange in this stage.
-    # hex -> int via DuckDB's 0x string cast: measured 4.7x faster
-    # than the strpos/list_sum emulation and value-identical
-    hexpr = "CAST(('0x' || substring(md5(s), 1, 8)) AS BIGINT) % 2147483647"
-    min_exprs = ", ".join(
-        f"MIN(({2 * i + 1} * h + {1000003 * i + 12345}) % 2147483647) AS m{i}"
-        for i in range(NUM_HASHES)
-    )
-    sig_sql = (
-        f"WITH hv AS (SELECT doc_id, {hexpr} AS h"
-        " FROM (SELECT doc_id, unnest(sh) AS s FROM _b))"
-        f" SELECT doc_id, {min_exprs} FROM hv GROUP BY doc_id"
-    )
-
-    def sig_build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sig_sql).fetch_arrow_table().to_batches()
-
-    sig_schema = "doc_id long, " + ", ".join(
-        f"m{i} long" for i in range(NUM_HASHES)
-    )
-    sig = mat.mapInArrow(sig_build, sig_schema).select(
+    # aggregation had nothing to combine). Zero Exchange in this stage.
+    sig = _duckdb_map(mat, *_minhash_sql("doc_id", "long", unnest=True)).select(
         "doc_id", F.array(*[f"m{i}" for i in range(NUM_HASHES)]).alias("sig")
     )
     # checkpoint the tiny (doc_id, band_key) table: it feeds THREE
@@ -742,7 +754,7 @@ def _dd02_candidates(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame
             f" x -> cast(x AS string)), '|')))))"
             " AS band_key",
         ),
-        "dd02_bands", key=f"dd02_bands:{_sfkey(sf)}", rebalance=True,
+        "dd02_bands", sf, rebalance=True,
     )
     hot = (
         bands.groupBy("band_key").agg(F.count("*").alias("n"))
@@ -759,7 +771,7 @@ def _dd02_candidates(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame
     # the candidate list is tiny but EXPENSIVE (md5 per shingle + 128 MIN
     # aggregates + banding self-join); five consumers re-derive it (dd02,
     # dd12, dd13, dd15, dd17), so checkpoint it like the shingle table
-    cand = _checkpoint(cand, "dd02_cand", key=f"dd02_cand:{_sfkey(sf)}", rebalance=True)
+    cand = _checkpoint(cand, "dd02_cand", sf, rebalance=True)
     return cand, mat
 
 
@@ -879,19 +891,16 @@ def dd06_dup_groups(spark: SparkSession, sf: str) -> DataFrame:
     # EAGERLY while this function body evaluates, so the keyed result
     # checkpoint alone could not stop a warm call from re-running every
     # round — short-circuit on the session cache BEFORE building the loop
-    gkey = f"dd06_groups:{_sfkey(sf)}"
-    if gkey in _CKPT_CACHE:
-        return spark.read.parquet(_CKPT_CACHE[gkey])
+    path = _ckpt_path("dd06_groups", sf)
+    if path is not None:
+        return spark.read.parquet(path)
 
     pairs = dd02_minhash_lsh_pairs(spark, sf).select("id_a", "id_b")
 
     def ckpt(df: DataFrame, tag: str) -> DataFrame:
-        key = f"dd06_edges:{_sfkey(sf)}" if tag == "cc_edges" else None
-        return _checkpoint(df, f"dd06_{tag}", key=key)
+        return _checkpoint(df, f"dd06_{tag}", sf if tag == "cc_edges" else None)
 
-    return _checkpoint(
-        largestar_components(pairs, ckpt), "dd06_groups", key=gkey,
-    )
+    return _checkpoint(largestar_components(pairs, ckpt), "dd06_groups", sf)
 
 
 def _sql_dd06() -> str:
@@ -1449,7 +1458,7 @@ def _dd05_unit(spark: SparkSession, sf: str) -> DataFrame:
         .selectExpr("vec_id", "v", f"{norm} AS nrm")
         .selectExpr("vec_id", "transform(v, x -> x / nrm) AS u")
     )
-    return _checkpoint(e, "dd05_unit", key=f"dd05_unit:{_sfkey(sf)}")
+    return _checkpoint(e, "dd05_unit", sf)
 
 
 _UNIT_MAT_CACHE: dict[str, tuple] = {}
@@ -1574,7 +1583,7 @@ def dd05_embedding_pairs(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
     _dd05_unit(spark, sf)  # ensure the checkpoint exists for the rescore
-    unit_path = _CKPT_CACHE[f"dd05_unit:{_sfkey(sf)}"]
+    unit_path = _ckpt_path("dd05_unit", sf)
     sigs = _dd05_sig_table(spark, sf)
     base_keys, probe_keys = [], []
     for tbl in range(DD05_TABLES):
@@ -1867,9 +1876,7 @@ def _media_table(spark: SparkSession, sf: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     docs = _t(spark, sf, "documents").select("doc_id").repartition(par, "doc_id")
-    return _checkpoint(
-        synth_media_from_docs(docs), "media", key=f"media:{_sfkey(sf)}"
-    )
+    return _checkpoint(synth_media_from_docs(docs), "media", sf)
 
 
 def mm01_media_features(spark: SparkSession, sf: str) -> DataFrame:
@@ -2253,13 +2260,13 @@ FROM d GROUP BY label
 """
 
 
-def sim03_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF SEARCH completing q19's build step: assign the query vector
-    (vec_id=0) to its nearest coarse centroid (10 tiny rows — broadcast),
-    then scan ONLY that cell's vectors (nprobe=1) for the top-10 by L2.
-    At scale the corpus is partitioned by assigned label (the IVF lists),
-    so the probe is a partition-pruned scan of corpus/n_cells rows — the
-    point of IVF; no distance is computed outside the probed cell."""
+def _ivf_probe(spark: SparkSession, sf: str, nprobe: int) -> DataFrame:
+    """IVF search: assign the query vector (vec_id=0) to its `nprobe`
+    nearest coarse centroids (10 tiny rows — broadcast), then scan ONLY
+    those cells' vectors for the global top-10 by L2. At scale the corpus
+    is partitioned by assigned label (the IVF lists), so the probe is a
+    partition-pruned scan of nprobe/n_cells of the corpus — the point of
+    IVF; no distance is computed outside the probed cells."""
     e = _ivf_embed(spark, sf)
     cent_vec = _ivf_centroid_df(e)
     q = e.filter(F.col("vec_id") == 0).selectExpr("v AS qv")
@@ -2271,19 +2278,25 @@ def sim03_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
         cent_vec.crossJoin(F.broadcast(q))
         .selectExpr("label", "qv", f"{dist_c} AS dc")
         .orderBy(F.col("dc").asc(), F.col("label").asc())
-        .limit(1)
+        .limit(nprobe)
     )
     dist_v = (
         "sqrt(aggregate(zip_with(v, qv, (a, b) -> (a - b) * (a - b)),"
         " CAST(0 AS double), (acc, x) -> acc + x))"
     )
     return (
-        e.join(F.broadcast(best), "label")
+        e.join(F.broadcast(best.select("label", "qv")), "label")
         .filter(F.col("vec_id") != 0)
         .selectExpr("vec_id", "label", f"round({dist_v}, 6) AS dist")
         .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
         .limit(10)
     )
+
+
+def sim03_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
+    """IVF SEARCH completing q19's build step, nprobe=1: scan only the
+    query vector's nearest cell (see _ivf_probe)."""
+    return _ivf_probe(spark, sf, 1)
 
 
 SQL_SIM03 = f"""
@@ -2907,33 +2920,8 @@ FROM n GROUP BY source HAVING SUM(n_ws) > 0
 def sim05_ivf_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     """IVF search with nprobe=2 (sim03 is nprobe=1): scan the TWO nearest
     cells and take the global top-10 — the standard recall knob when the
-    true neighbor sits just across a Voronoi boundary. The probe is still
-    a partition-pruned scan of 2/n_cells of the corpus; nothing outside
-    the probed cells is touched."""
-    e = _ivf_embed(spark, sf)
-    cent_vec = _ivf_centroid_df(e)
-    q = e.filter(F.col("vec_id") == 0).selectExpr("v AS qv")
-    dist_c = (
-        "sqrt(aggregate(zip_with(centroid, qv, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS double), (acc, x) -> acc + x))"
-    )
-    best2 = (
-        cent_vec.crossJoin(F.broadcast(q))
-        .selectExpr("label", "qv", f"{dist_c} AS dc")
-        .orderBy(F.col("dc").asc(), F.col("label").asc())
-        .limit(2)
-    )
-    dist_v = (
-        "sqrt(aggregate(zip_with(v, qv, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS double), (acc, x) -> acc + x))"
-    )
-    return (
-        e.join(F.broadcast(best2.select("label", "qv")), "label")
-        .filter(F.col("vec_id") != 0)
-        .selectExpr("vec_id", "label", f"round({dist_v}, 6) AS dist")
-        .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+    true neighbor sits just across a Voronoi boundary (see _ivf_probe)."""
+    return _ivf_probe(spark, sf, 2)
 
 
 _SIM06_OVERSAMPLE = 4  # int8 screen keeps k*oversample candidates for rescore
@@ -3137,8 +3125,7 @@ def dd09_bloom_prefilter(spark: SparkSession, sf: str) -> DataFrame:
     # reuses probe positions computed under the old geometry)
     ex = _checkpoint(
         docs.filter("NOT is_new").select("h", "pos"),
-        "dd09_ex",
-        key=f"dd09_ex:{_sfkey(sf)}:{_BLOOM_M}:{_BLOOM_K}:{_bloom_width()}",
+        "dd09_ex", sf, extra=(_BLOOM_M, _BLOOM_K, _bloom_width()),
         rebalance=True,
     )
     bits = ex.selectExpr("explode(pos) AS pos").distinct()
@@ -3924,22 +3911,12 @@ SELECT doc_id, len(t) AS n_tokens, CAST(i AS BIGINT) AS s,
 FROM (SELECT doc_id, {td} AS t FROM _b),
      unnest(generate_series(1, len(t) - {_SPAN_W} + 1)) AS u(i)
 WHERE len(t) >= {_SPAN_W}"""
-
-    def build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sql).fetch_arrow_table().to_batches()
-
     starts = _checkpoint(
-        _docs_par(spark, sf).select("doc_id", "text")
-        .mapInArrow(build, "doc_id long, n_tokens long, s long, g string"),
-        "dd10_starts", key=f"dd10_starts:{_sfkey(sf)}",
+        _duckdb_map(
+            _docs_par(spark, sf).select("doc_id", "text"), sql,
+            "doc_id long, n_tokens long, s long, g string",
+        ),
+        "dd10_starts", sf,
     )
     shared = (
         starts.select("doc_id", "g").distinct()
@@ -4718,11 +4695,11 @@ def _sim08_knn(spark: SparkSession, sf: str) -> DataFrame:
 
     asg = _checkpoint(
         _km01_assigned(spark, sf).select("vec_id", "cid"),
-        "sim08_asg", key=f"sim08_asg:{_sfkey(sf)}", rebalance=True,
+        "sim08_asg", sf, rebalance=True,
     )
-    asg_path = _CKPT_CACHE[f"sim08_asg:{_sfkey(sf)}"]
+    asg_path = _ckpt_path("sim08_asg", sf)
     _dd05_unit(spark, sf)
-    unit_path = _CKPT_CACHE[f"dd05_unit:{_sfkey(sf)}"]
+    unit_path = _ckpt_path("dd05_unit", sf)
     par = spark.sparkContext.defaultParallelism
     nb = max(1, (par * 2) // _KM_K)  # row-blocks per cluster
     # numbered repartition on the group key: the id rows are a few KB,
@@ -4782,7 +4759,7 @@ def _sim08_knn(spark: SparkSession, sf: str) -> DataFrame:
     knn = blocks.groupBy("cid", "blk").applyInPandas(
         knn_block, "id_a long, id_b long, cos_sim double"
     )
-    return _checkpoint(knn, "sim08_knn", key=f"sim08_knn:{_sfkey(sf)}", rebalance=True)
+    return _checkpoint(knn, "sim08_knn", sf, rebalance=True)
 
 
 def sim08_mutual_knn(spark: SparkSession, sf: str) -> DataFrame:
@@ -4879,8 +4856,7 @@ def _sim08_edges(spark: SparkSession, sf: str) -> DataFrame:
     write prices the whole graph family — the dd02-signature pattern."""
     return _checkpoint(
         sim08_mutual_knn(spark, sf).select("id_a", "id_b"),
-        "sim08_edges",
-        key=f"sim08_edges:{_sfkey(sf)}", rebalance=True,
+        "sim08_edges", sf, rebalance=True,
     )
 
 
@@ -6445,7 +6421,7 @@ def q63_bpe_train3(spark: SparkSession, sf: str) -> DataFrame:
     # vocab-sized scratch write per merge makes each pass run once
     # (guide §2.4/§3.3: materialize shared intermediates of an
     # iterative plan instead of re-deriving them under a growing tree)
-    cur = _checkpoint(cur, "q63_s0", key=f"q63_s0:{_sfkey(sf)}")
+    cur = _checkpoint(cur, "q63_s0", sf)
     steps = []
     for step in range(1, _BPE_TRAIN_STEPS + 1):
         pairs = (
@@ -6474,7 +6450,7 @@ def q63_bpe_train3(spark: SparkSession, sf: str) -> DataFrame:
                     " ' '), x -> x != ''), ' ') AS s",
                     "freq",
                 ),
-                f"q63_s{step}", key=f"q63_s{step}:{_sfkey(sf)}",
+                f"q63_s{step}", sf,
             )
     out = steps[0]
     for s_df in steps[1:]:
@@ -6724,7 +6700,7 @@ def _dd16_sets(
         .selectExpr("source", "explode(sh) AS sh")
         .distinct()
     )
-    ss = _checkpoint(ss, "dd16_ss", key=f"dd16_ss:{_sfkey(sf)}")  # 3 consumers
+    ss = _checkpoint(ss, "dd16_ss", sf)  # 3 consumers
     sizes = ss.groupBy("source").agg(F.count("*").alias("n_sh"))
     # explicit numbered repartition: the (source, shingle) table is small
     # in bytes but the shingle self-join fans out up to |sources|^2/2 rows
@@ -6764,34 +6740,8 @@ def dd16_source_overlap(spark: SparkSession, sf: str) -> DataFrame:
     # then a tiny JVM min-of-mins per source: sources span batches, so
     # unlike dd02 one JVM combine remains — over |sources| x #batches
     # rows instead of the full exploded (source, shingle-hash) table.
-    # hex -> int via DuckDB's 0x string cast: measured 4.7x faster
-    # than the strpos/list_sum emulation and value-identical
-    hexpr = "CAST(('0x' || substring(md5(sh), 1, 8)) AS BIGINT) % 2147483647"
-    min_exprs = ", ".join(
-        f"MIN(({2 * i + 1} * h + {1000003 * i + 12345}) % 2147483647) AS m{i}"
-        for i in range(NUM_HASHES)
-    )
-    sig_sql = (
-        f"WITH hv AS (SELECT source, {hexpr} AS h FROM _b)"
-        f" SELECT source, {min_exprs} FROM hv GROUP BY source"
-    )
-
-    def sig_build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sig_sql).fetch_arrow_table().to_batches()
-
-    sig_schema = "source string, " + ", ".join(
-        f"m{i} long" for i in range(NUM_HASHES)
-    )
     sig = (
-        ss.mapInArrow(sig_build, sig_schema)
+        _duckdb_map(ss, *_minhash_sql("source", "string", unnest=False))
         .groupBy("source")
         .agg(*[F.min(f"m{i}").alias(f"m{i}") for i in range(NUM_HASHES)])
         .select(

@@ -8,7 +8,10 @@ Each test pins an equivalence an optimization relies on:
   - _docs_par's size-adaptive floor skips the exchange on a small input
     and fans out on a large one;
   - the one-pass rule_metrics_table still counts a hit finding whose
-    doc has an EMPTY lang list (model-error rows) in `hits`.
+    doc has an EMPTY lang list (model-error rows) in `hits`;
+  - the keyed scratch-table cache (`_checkpoint` with an sf dir) serves a
+    table again only for the same tag, the same input files and the
+    same extra key parameters.
 """
 
 from __future__ import annotations
@@ -129,3 +132,64 @@ def test_metrics_one_pass_counts_empty_lang_hits(spark):
     # every registered rule appears; non-hit rules are zero
     assert len(out) == len(TH.RULES)
     assert all(r.hits == 0 for name, r in out.items() if name != rule0)
+
+
+def _scratch_dirs(root, tag: str) -> set:
+    return {p.name for p in root.glob(f"rsmc_ckpt_{tag}_*")}
+
+
+def _write_docs(sf, rows) -> None:
+    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
+        sf / "documents.parquet", index=False
+    )
+
+
+def test_scratch_key_tracks_input_params_and_repeats(spark, tmp_path, monkeypatch):
+    """The scratch-table key contract: (a) rewriting documents.parquet
+    under the same sf dir invalidates the shingle table; (b) dd09's
+    existence table is rebuilt when the Bloom geometry changes; (c) a
+    repeated keyed call for the same tag and sf writes no new table."""
+    import tempfile
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    _write_docs(sf, [(1, "a b c d"), (2, "e f g h"), (3, "x y")])
+    first = {r.doc_id for r in Q._shingle_mat(spark, str(sf)).collect()}
+    assert first == {1, 2}
+    made = _scratch_dirs(scratch, "dd02_sh")
+    assert len(made) == 1
+    # (c) same tag, same unchanged input: served from the session cache
+    again = {r.doc_id for r in Q._shingle_mat(spark, str(sf)).collect()}
+    assert again == first
+    assert _scratch_dirs(scratch, "dd02_sh") == made
+
+    # (a) regenerated input at the same path: the stale table is not served
+    _write_docs(sf, [(7, "p q r s t"), (8, "u v")])
+    assert {r.doc_id for r in Q._shingle_mat(spark, str(sf)).collect()} == {7}
+    assert len(_scratch_dirs(scratch, "dd02_sh")) == 2
+
+    # (b) dd09's existence table is keyed on the Bloom geometry too
+    _write_docs(sf, [(i, f"doc {i} text {i % 5}") for i in range(40)])
+
+    def ex_max_pos(m: int) -> tuple[int, int]:
+        monkeypatch.setattr(Q, "_BLOOM_M", m)
+        before = _scratch_dirs(scratch, "dd09_ex")
+        Q.dd09_bloom_prefilter(spark, str(sf))
+        new = _scratch_dirs(scratch, "dd09_ex") - before
+        if not new:
+            return 0, -1
+        (name,) = new
+        top = spark.read.parquet(str(scratch / name)).selectExpr(
+            "max(array_max(pos)) AS m"
+        ).first().m
+        return len(new), top
+
+    n, top = ex_max_pos(8192)
+    assert n == 1 and top >= 2048
+    assert ex_max_pos(8192) == (0, -1)  # (c) same geometry: no new table
+    n, top = ex_max_pos(2048)
+    assert n == 1 and top < 2048
