@@ -155,6 +155,8 @@ def main(argv: list[str] | None = None) -> None:
 
     from functools import reduce
 
+    from pyspark.sql import functions as F
+
     from rsmetacheck_spark.operators.metrics import host_metrics_table
     from rsmetacheck_spark.operators.report import per_doc_reports, summary_report
     from rsmetacheck_spark.plans.pipeline import materialize, read_pages
@@ -208,9 +210,13 @@ def main(argv: list[str] | None = None) -> None:
         args.pitfalls_output or os.path.join(args.output, "reports"),
         partition_by=("bucket",),
     )
-    total = pages_out.count()
-    kept = pages_out.filter("keep").count()
-    summary = summary_report(metrics, total, kept)
+    # both summary numbers in ONE job over the sink; sum(keep) is null on
+    # empty input, where kept must read 0
+    counts = pages_out.agg(
+        F.count(F.lit(1)).alias("total"),
+        F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias("kept"),
+    ).first()
+    summary = summary_report(metrics, counts.total, counts.kept)
     analysis_path = args.analysis_output or os.path.join(
         args.output, "analysis_results.json"
     )

@@ -55,6 +55,27 @@ def test_cli_default_run(spark, pages_parquet, th_restore):
     assert os.path.isdir(os.path.join(out, "metrics"))
 
 
+@pytest.mark.parametrize("extra", [(), ("--resume",)], ids=["plain", "resume"])
+def test_cli_summary_counts_match_sink(spark, pages_parquet, th_restore, extra):
+    """total_docs and kept in analysis_results.json are the sink's row
+    count and keep count, on the plain and the --resume path."""
+    out = _run(pages_parquet, *extra)
+    summary = json.load(open(os.path.join(out, "analysis_results.json")))
+    sink = spark.read.parquet(os.path.join(out, "pages_out"))
+    assert summary["total_docs"] == sink.count() == 300
+    assert summary["kept"] == sink.filter("keep").count()
+    assert summary["dropped"] == summary["total_docs"] - summary["kept"]
+
+
+def test_cli_summary_counts_on_empty_input(spark, pages_parquet, th_restore):
+    """An empty input reports 0 docs and 0 kept, not a null keep sum."""
+    empty = tempfile.mkdtemp(prefix="cli_empty_")
+    spark.read.parquet(pages_parquet).limit(0).write.mode("overwrite").parquet(empty)
+    out = _run(empty)
+    summary = json.load(open(os.path.join(out, "analysis_results.json")))
+    assert (summary["total_docs"], summary["kept"], summary["dropped"]) == (0, 0, 0)
+
+
 def test_cli_multi_input_union(spark, pages_parquet, th_restore):
     # nargs='+' AND a repeated flag must both accumulate (action='extend');
     # the default argparse store action silently discards earlier --input
