@@ -42,6 +42,18 @@ def shift(col: pa.ChunkedArray, delta: int) -> pa.ChunkedArray:
     return pc.add(col, pa.scalar(delta, type=col.type))
 
 
+def replace(tbl: pa.Table, **cols: pa.ChunkedArray) -> pa.Table:
+    """Replace columns by NAME (never by position): if a source table's
+    column order changes, or a column is renamed, this fails instead of
+    silently overwriting the wrong column of the perf dataset."""
+    for name, col in cols.items():
+        i = tbl.schema.get_field_index(name)
+        if i < 0:
+            raise KeyError(f"column {name!r} not in {tbl.schema.names}")
+        tbl = tbl.set_column(i, name, col)
+    return tbl
+
+
 def write(tbl: pa.Table, out_dir: str, name: str) -> None:
     pq.write_table(tbl, os.path.join(out_dir, f"{name}.parquet"),
                    compression="snappy", row_group_size=200_000)
@@ -61,25 +73,22 @@ def rep_relational(out: str, k: int) -> None:
     def copies(tbl: pa.Table, fn) -> pa.Table:
         return pa.concat_tables([fn(tbl, i) for i in range(k)])
 
-    write(copies(cust, lambda t, i: t.set_column(
-        0, "c_custkey", shift(t["c_custkey"], i * n_c))), out, "customer")
-    write(copies(supp, lambda t, i: t.set_column(
-        0, "s_suppkey", shift(t["s_suppkey"], i * n_s))), out, "supplier")
-    write(copies(part, lambda t, i: t.set_column(
-        0, "p_partkey", shift(t["p_partkey"], i * n_p))), out, "part")
-    write(copies(orders, lambda t, i: t
-                 .set_column(0, "o_orderkey", shift(t["o_orderkey"], i * okey_span))
-                 .set_column(1, "o_custkey", shift(t["o_custkey"], i * n_c))),
-          out, "orders")
-    write(copies(li, lambda t, i: t
-                 .set_column(0, "l_orderkey", shift(t["l_orderkey"], i * okey_span))
-                 .set_column(1, "l_partkey", shift(t["l_partkey"], i * n_p))
-                 .set_column(2, "l_suppkey", shift(t["l_suppkey"], i * n_s))),
-          out, "lineitem")
-    write(copies(ev, lambda t, i: t
-                 .set_column(0, "event_id", shift(t["event_id"], i * ekey_span))
-                 .set_column(2, "user_id", shift(t["user_id"], i * ukey_span))),
-          out, "events")
+    write(copies(cust, lambda t, i: replace(
+        t, c_custkey=shift(t["c_custkey"], i * n_c))), out, "customer")
+    write(copies(supp, lambda t, i: replace(
+        t, s_suppkey=shift(t["s_suppkey"], i * n_s))), out, "supplier")
+    write(copies(part, lambda t, i: replace(
+        t, p_partkey=shift(t["p_partkey"], i * n_p))), out, "part")
+    write(copies(orders, lambda t, i: replace(
+        t, o_orderkey=shift(t["o_orderkey"], i * okey_span),
+        o_custkey=shift(t["o_custkey"], i * n_c))), out, "orders")
+    write(copies(li, lambda t, i: replace(
+        t, l_orderkey=shift(t["l_orderkey"], i * okey_span),
+        l_partkey=shift(t["l_partkey"], i * n_p),
+        l_suppkey=shift(t["l_suppkey"], i * n_s))), out, "lineitem")
+    write(copies(ev, lambda t, i: replace(
+        t, event_id=shift(t["event_id"], i * ekey_span),
+        user_id=shift(t["user_id"], i * ukey_span))), out, "events")
     for name in ("region", "nation"):
         write(read(name), out, name)
 
@@ -96,11 +105,9 @@ def rep_documents(out: str, k: int) -> None:
             suff = f"k{i}"
             new_texts = [" ".join(w + suff for w in s.split()) for s in texts]
             arr = pa.array(new_texts, type=pa.string())
-            t = (docs
-                 .set_column(0, "doc_id", shift(docs["doc_id"], i * n_d))
-                 .set_column(1, "text", arr)
-                 .set_column(4, "n_chars", pc.cast(
-                     pc.utf8_length(arr), pa.int64())))
+            t = replace(
+                docs, doc_id=shift(docs["doc_id"], i * n_d), text=arr,
+                n_chars=pc.cast(pc.utf8_length(arr), pa.int64()))
         parts.append(t)
     write(pa.concat_tables(parts), out, "documents")
 
@@ -122,9 +129,7 @@ def rep_embeddings(out: str, k: int) -> None:
         arr = pa.FixedSizeListArray.from_arrays(
             pa.array(m.reshape(-1), type=pa.float32()), dim).cast(
             pa.list_(pa.float32()))
-        t = (emb
-             .set_column(0, "vec_id", shift(emb["vec_id"], i * n_e))
-             .set_column(1, "embedding", arr))
+        t = replace(emb, vec_id=shift(emb["vec_id"], i * n_e), embedding=arr)
         parts.append(t)
     write(pa.concat_tables(parts), out, "embeddings")
 
