@@ -10,8 +10,12 @@
 
 Reads the pages table(s), runs the quality-filter pipeline, writes
 pages_out / metrics / lineage / host_metrics (+ per-doc JSON reports),
-prints the summary JSON. With --resume, processes only buckets missing
-from the output checkpoint (streaming/incremental.py).
+prints the summary JSON. A plain run writes every bucket of pages_out in
+one job (plans/pipeline.materialize); with --resume, only the buckets
+missing from the output checkpoint are written (streaming/incremental.py).
+Either way the same tail follows: plans/pipeline.finish reads the sink
+back and writes metrics / lineage, then host metrics, the per-doc reports
+and the summary come from that one PipelineResult.
 
 CLI surface mirrors the reference cli.py:8-38:
   --input is multi-valued with per-item dispatch (cli.py:11-16's URL/file
@@ -159,10 +163,10 @@ def main(argv: list[str] | None = None) -> None:
 
     from rsmetacheck_spark.operators.metrics import host_metrics_table
     from rsmetacheck_spark.operators.report import per_doc_reports, summary_report
-    from rsmetacheck_spark.plans.pipeline import materialize, read_pages
+    from rsmetacheck_spark.plans import pipeline
     from rsmetacheck_spark.session import get_spark
     from rsmetacheck_spark.sources.tables import write_table
-    from rsmetacheck_spark.streaming.incremental import read_resumed, resume_materialize
+    from rsmetacheck_spark.streaming import incremental
 
     spark = get_spark("rsmetacheck_main", cores=args.cpus)
     # every input must carry the payload column for the selected mode —
@@ -171,7 +175,7 @@ def main(argv: list[str] | None = None) -> None:
     payload = "text" if args.skip_extract else "html"
     parts = []
     for path in args.input:
-        df = read_pages(spark, path)
+        df = pipeline.read_pages(spark, path)
         if payload not in df.columns:
             raise SystemExit(
                 f"--input {path}: missing required column {payload!r} "
@@ -187,22 +191,16 @@ def main(argv: list[str] | None = None) -> None:
     snapshot = args.snapshot or f"input:{','.join(args.input)}"
 
     if args.resume:
-        resume_materialize(spark, pages, args.output,
-                           text_input=args.skip_extract)
-        pages_out = read_resumed(spark, args.output)
-        from rsmetacheck_spark.operators.metrics import (
-            lineage_table,
-            rule_metrics_table,
-        )
-        metrics = rule_metrics_table(pages_out)
-        write_table(metrics, os.path.join(args.output, "metrics"))
-        write_table(lineage_table(pages_out, snapshot), os.path.join(args.output, "lineage"))
+        incremental.resume_materialize(spark, pages, args.output,
+                                       text_input=args.skip_extract)
+        schema = pipeline.verdict_plan(pages, text_input=args.skip_extract).schema
+        res = pipeline.finish(spark, args.output, schema, snapshot)
     else:
-        res = materialize(
+        res = pipeline.materialize(
             spark, pages, args.output, input_snapshot=snapshot,
             text_input=args.skip_extract,
         )
-        pages_out, metrics = res.pages_out, res.metrics
+    pages_out = res.pages_out
 
     write_table(host_metrics_table(pages_out), os.path.join(args.output, "host_metrics"))
     write_table(
@@ -216,7 +214,7 @@ def main(argv: list[str] | None = None) -> None:
         F.count(F.lit(1)).alias("total"),
         F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias("kept"),
     ).first()
-    summary = summary_report(metrics, counts.total, counts.kept)
+    summary = summary_report(res.metrics, counts.total, counts.kept)
     analysis_path = args.analysis_output or os.path.join(
         args.output, "analysis_results.json"
     )

@@ -16,7 +16,6 @@ import re
 
 from .. import thresholds as TH
 
-_TOK_RE = re.compile(r"[^a-z0-9]+")
 _TOK_FIND_RE = re.compile(r"[a-z0-9]+")
 _STOPSET = frozenset(TH.STOPWORD_UNION)
 
@@ -36,7 +35,8 @@ _SYM_RE = re.compile("[" + re.escape(TH.SYMBOL_CHARS) + "]")
 
 
 def tokenize(text: str) -> list[str]:
-    """THE canonical tokenization (same regex as operators/perplexity).
+    """THE canonical tokenization, shared by the stats here, the
+    perplexity model (operators/perplexity) and the oracle.
 
     findall of the token class is PROVABLY the same list as splitting on
     the complement and trimming boundary empties (interior empties cannot

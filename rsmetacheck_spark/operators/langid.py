@@ -13,8 +13,6 @@ from __future__ import annotations
 import math
 import re
 
-import pandas as pd
-
 from .. import thresholds as TH
 
 _NORM_RE = re.compile(r"[^a-z ]+")
@@ -89,9 +87,6 @@ class LangIdModel:
         scores = self.scores(text)
         order = sorted(range(len(scores)), key=lambda j: (-scores[j], j))
         return [self.langs[j] for j in order[:2]]
-
-    def predict_series(self, texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: self.predict(t if isinstance(t, str) else ""))
 
 
 _MODEL: LangIdModel | None = None

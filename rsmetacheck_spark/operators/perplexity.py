@@ -1,7 +1,7 @@
 """KenLM-style token-bigram language model for perplexity scoring.
 
-Interpolated bigram/unigram/uniform LM over the canonical tokenization,
-trained deterministically from a fixed-seed synthetic clean corpus at first
+Interpolated bigram/unigram/uniform LM over the canonical tokenization
+(functions/pytext.tokenize), trained deterministically from a fixed-seed synthetic clean corpus at first
 use. Lazy per-executor singleton; scored inside the fused mapInPandas stage
 (vectorized Arrow batches, never per-row Python at the Spark API surface).
 """
@@ -9,21 +9,11 @@ use. Lazy per-executor singleton; scored inside the fused mapInPandas stage
 from __future__ import annotations
 
 import math
-import re
 
-import pandas as pd
+from ..functions.pytext import tokenize
 
-_TOK_RE = re.compile(r"[^a-z0-9]+")
-_TOK_FIND_RE = re.compile(r"[a-z0-9]+")
 _MAX_TOKENS = 200
 _L_BI, _L_UNI, _L_UNIF = 0.7, 0.25, 0.05
-
-
-def tokenize(text: str) -> list[str]:
-    """THE canonical tokenization — shared with rules, oracle, and dedup.
-    findall of the token class == split-on-complement minus empties
-    (identical list for every input), ~1.5x faster."""
-    return _TOK_FIND_RE.findall(text.lower())
 
 
 class PerplexityModel:
@@ -61,9 +51,6 @@ class PerplexityModel:
             p = _L_BI * p_bi + _L_UNI * p_uni + _L_UNIF / vsize
             nll -= math.log(p)
         return round(nll / (len(toks) - 1), 6)
-
-    def score_series(self, texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: self.log_ppl(t if isinstance(t, str) else ""))
 
 
 _MODEL: PerplexityModel | None = None

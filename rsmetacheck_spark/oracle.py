@@ -63,7 +63,7 @@ def oracle_labels(pages: pd.DataFrame) -> pd.DataFrame:
     for rec in pages.itertuples(index=False):
         text = extract_text(rec.html)
         lang_pred = langid.predict(text)
-        log_ppl = ppl.log_ppl(text)  # independent tokenization on purpose
+        log_ppl = ppl.log_ppl(text)  # tokenizes with the shared pytext.tokenize
         scrubbed, counts = scrub_text(text)
         hits = doc_rule_hits(text, rec.url, rec.warc_ts, lang_pred, log_ppl, counts)
         keep = not any(hits[r] for r, sev in TH.RULES if sev == TH.DROP)

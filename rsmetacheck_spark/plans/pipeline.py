@@ -5,14 +5,20 @@ detect_pitfalls_main.py:41-412, recast as one lazy DataFrame graph):
       -> fused model stage (extract + langid + perplexity + scrub + token
          stats; ONE Arrow round trip, per-executor model singletons)
       -> native-expr rules -> findings array + keep gate
-      -> materialize pages_out (partitioned by url-hash bucket)
-      -> metrics / lineage FROM THE WRITTEN TABLE
+      -> write_buckets: pages_out, partitioned by url-hash bucket
+      -> finish: metrics / lineage FROM THE WRITTEN TABLE
+
+This module owns everything after the verdicts, for both ways a run
+writes the sink. `materialize` writes every bucket in one job; a resumed
+run (streaming/incremental.py) writes the missing buckets group by group
+through the same `write_buckets`. Both then call the same `finish`, which
+reads the sink back with the verdict schema (`read_sink`) and derives
+metrics and lineage from it.
 
 Why metrics read the sink instead of re-aggregating the live plan: the
 model stage is the expensive part; aggregating the written table scans only
 the narrow columns (column pruning at the parquet scan) and never
-recomputes models. The bucket column doubles as the checkpoint/resume unit
-(streaming/incremental.py).
+recomputes models. The bucket column doubles as the checkpoint/resume unit.
 
 Scale notes (the 100 TB story):
  - model stage: embarrassingly parallel, zero shuffle; partition sizing is
@@ -29,8 +35,9 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import thresholds as TH
 from ..operators.metrics import lineage_table, rule_metrics_table
@@ -49,10 +56,17 @@ class PipelineResult:
     pages_out: DataFrame
     metrics: DataFrame
     lineage: DataFrame
-    snapshot: str | None = None
     # global counters observed DURING the sink write (free — no extra
-    # scan or job; see the Observation in materialize)
+    # scan or job; see the Observation in write_buckets); None after a
+    # resumed run, whose writes each saw only part of the table
     observed: dict | None = None
+
+
+def bucket_of() -> Column:
+    """The url-hash bucket: the sink's partition column and the unit a
+    resumed run checkpoints. A pure function of the url, so a resumed run
+    can filter on it before the model stage."""
+    return F.pmod(F.xxhash64("url"), F.lit(TH.N_BUCKETS)).cast("int")
 
 
 def verdict_plan(pages: DataFrame, text_input: bool = False) -> DataFrame:
@@ -67,10 +81,7 @@ def verdict_plan(pages: DataFrame, text_input: bool = False) -> DataFrame:
     pages = pages.select("url", "warc_ts", "text" if text_input else "html")
     scored = apply_model_stage(pages, text_input=text_input)
     out = with_findings(scored)
-    out = out.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(TH.N_BUCKETS)).cast("int")
-    )
-    return out.select(*OUTPUT_COLS)
+    return out.withColumn("bucket", bucket_of()).select(*OUTPUT_COLS)
 
 
 def encode_for_sink(df: DataFrame) -> DataFrame:
@@ -169,14 +180,86 @@ def _scan_partitions_estimate(spark: SparkSession, pages: DataFrame) -> int | No
     return max(1, -(-total // max_split))
 
 
-def run_pipeline(pages: DataFrame, input_snapshot: str = "synthetic") -> PipelineResult:
-    """Lazy result (no writes) — aggregates recompute the plan; prefer
-    `materialize` for anything bigger than a unit test."""
-    pages_out = decode_from_sink(verdict_plan(pages))
+def write_buckets(
+    plan: DataFrame, pages_path: str, buckets: list[int] | None = None
+) -> dict:
+    """Write verdict rows to the sink, one file per bucket, and return the
+    counters observed during the write.
+
+    buckets=None: `plan` holds every bucket and replaces the whole table
+    (write_table, which stamps the manifest). A list: `plan` holds only
+    those buckets, and only their directories are replaced (dynamic
+    partition overwrite), so a completed bucket is never rewritten and a
+    retried group is idempotent — the resume unit."""
+    # Cluster by bucket before the partitioned write: otherwise every write
+    # task emits a file per bucket (tasks × buckets tiny files — observed
+    # 2048 files for a 4k-doc bench, dominating both the write and every
+    # downstream scan). One shuffle of the verdict rows -> one file per
+    # bucket. The model stage still parallelizes at the scan partitioning,
+    # upstream of this exchange.
+    rows = encode_for_sink(plan).repartition(
+        len(buckets) if buckets else TH.N_BUCKETS, "bucket"
+    )
+    # Global counters ride the WRITE action itself (AggregatingAccumulator
+    # under CollectMetrics): at 100 TB this is n_docs/n_keep/n_errors for
+    # free — no separate count job, no second scan of the sink. The
+    # metrics/lineage tables still aggregate the sink (they need per-rule
+    # breakdowns); tests assert the observed counters equal the
+    # sink-derived ones.
+    obs = Observation("sink_counters")
+    rows = rows.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.col("keep").cast("long")).alias("n_keep"),
+        F.sum(F.col("model_error").isNotNull().cast("long")).alias(
+            "n_model_errors"
+        ),
+    )
+    if buckets is None:
+        write_table(rows, pages_path, partition_by=("bucket",))
+    else:
+        (
+            rows.write.mode("overwrite")
+            .partitionBy("bucket")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(pages_path)
+        )
+    return {k: (v if v is not None else 0) for k, v in obs.get.items()}
+
+
+def read_sink(spark: SparkSession, out_dir: str, schema: StructType) -> DataFrame:
+    """The written pages_out, decoded. Read with the verdict schema: an
+    empty input writes no data files, and schema inference would fail."""
+    return decode_from_sink(
+        spark.read.schema(schema).parquet(os.path.join(out_dir, "pages_out"))
+    )
+
+
+def finish(
+    spark: SparkSession,
+    out_dir: str,
+    schema: StructType,
+    input_snapshot: str = "synthetic",
+    observed: dict | None = None,
+) -> PipelineResult:
+    """Derive metrics/lineage from the written sink and write them."""
+    pages_out = read_sink(spark, out_dir, schema)
+    metrics = rule_metrics_table(pages_out)
+    lineage = lineage_table(pages_out, input_snapshot)
+    # Two independent small aggregation jobs over the sink — submit them
+    # concurrently so the scheduler interleaves their tasks (halves the
+    # serial tail of the run).
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(2) as ex:
+        fm = ex.submit(write_table, metrics, os.path.join(out_dir, "metrics"))
+        fl = ex.submit(write_table, lineage, os.path.join(out_dir, "lineage"))
+        fm.result(), fl.result()
     return PipelineResult(
         pages_out=pages_out,
-        metrics=rule_metrics_table(pages_out),
-        lineage=lineage_table(pages_out, input_snapshot),
+        metrics=spark.read.schema(metrics.schema).parquet(os.path.join(out_dir, "metrics")),
+        lineage=spark.read.schema(lineage.schema).parquet(os.path.join(out_dir, "lineage")),
+        observed=observed,
     )
 
 
@@ -187,8 +270,7 @@ def materialize(
     input_snapshot: str = "synthetic",
     text_input: bool = False,
 ) -> PipelineResult:
-    """Write pages_out once; derive metrics/lineage from the written table."""
-    pages_path = os.path.join(out_dir, "pages_out")
+    """Write every bucket of pages_out in one job, then `finish`."""
     # Size-bound parallelism: at 100 TB the scan naturally yields
     # maxPartitionBytes-bounded partitions; a small test/bench input can
     # arrive as 1-2 partitions, which would serialize the Python model
@@ -206,53 +288,8 @@ def materialize(
     if n_parts is not None and (2 * n_parts < target or n_parts > 2 * target):
         pages = pages.repartition(target)
     plan = verdict_plan(pages, text_input=text_input)
-    # Cluster by bucket before the partitioned write: otherwise every write
-    # task emits a file per bucket (tasks × buckets tiny files — observed
-    # 2048 files for a 4k-doc bench, dominating both the write and every
-    # downstream scan). One shuffle of the verdict rows -> one file per
-    # bucket. The model stage still parallelizes at the scan partitioning,
-    # upstream of this exchange.
-    clustered = encode_for_sink(plan).repartition(TH.N_BUCKETS, "bucket")
-    # Global counters ride the WRITE action itself (AggregatingAccumulator
-    # under CollectMetrics): at 100 TB this is n_docs/n_keep/n_errors for
-    # free — no separate count job, no second scan of the sink. The
-    # metrics/lineage tables still aggregate the sink (they need per-rule
-    # breakdowns); tests assert the observed counters equal the
-    # sink-derived ones.
-    from pyspark.sql import Observation
-
-    obs = Observation("sink_counters")
-    clustered = clustered.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        F.sum(F.col("model_error").isNotNull().cast("long")).alias(
-            "n_model_errors"
-        ),
-    )
-    snapshot = write_table(clustered, pages_path, partition_by=("bucket",))
-    observed = {k: (v if v is not None else 0) for k, v in obs.get.items()}
-    # Read back with the plan's schema: an empty input writes no data files
-    # and schema inference would fail (probe-found edge case).
-    pages_out = decode_from_sink(spark.read.schema(plan.schema).parquet(pages_path))
-    metrics = rule_metrics_table(pages_out)
-    lineage = lineage_table(pages_out, input_snapshot)
-    # Two independent small aggregation jobs over the sink — submit them
-    # concurrently so the scheduler interleaves their tasks (halves the
-    # serial tail of the run).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as ex:
-        fm = ex.submit(write_table, metrics, os.path.join(out_dir, "metrics"))
-        fl = ex.submit(write_table, lineage, os.path.join(out_dir, "lineage"))
-        fm.result(), fl.result()
-    return PipelineResult(
-        pages_out=pages_out,
-        metrics=spark.read.schema(metrics.schema).parquet(os.path.join(out_dir, "metrics")),
-        lineage=spark.read.schema(lineage.schema).parquet(os.path.join(out_dir, "lineage")),
-        snapshot=snapshot,
-        observed=observed,
-    )
+    observed = write_buckets(plan, os.path.join(out_dir, "pages_out"))
+    return finish(spark, out_dir, plan.schema, input_snapshot, observed)
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:

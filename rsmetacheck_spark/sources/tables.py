@@ -1,11 +1,9 @@
-"""Table layer: Iceberg when a catalog is configured, parquet-with-manifest
-otherwise (SURVEY §7 risk list: "if the runtime lacks an Iceberg catalog
-jar, the table layer must degrade to parquet ... without changing the
-pipeline API").
+"""Table layer: parquet plus a `_manifest.json` snapshot stamp.
 
-The sandbox image has no Iceberg jars, so `iceberg_available()` is False
-here and all writes go through the parquet shim; the API (read_table /
-write_table / snapshot id) is what the pipeline codes against.
+`write_table` always writes parquet and stamps the manifest; there is no
+Iceberg path (no catalog jar in this runtime). The pipeline codes against
+`write_table` only, so an Iceberg-backed writer could replace it without
+changing the pipeline API (SURVEY §7 risk list).
 """
 
 from __future__ import annotations
@@ -15,17 +13,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark.conf.get("spark.sql.catalog.spark_catalog")
-        jvm_ok = "Iceberg" in str(
-            spark.conf.get("spark.sql.extensions", "")
-        )
-        return jvm_ok
-    except Exception:
-        return False
 
 
 def write_table(
@@ -41,10 +28,6 @@ def write_table(
     with open(os.path.join(path, "_manifest.json"), "w") as fh:
         json.dump({"snapshot": snapshot, "partition_by": list(partition_by)}, fh)
     return snapshot
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_table_pruned(spark: SparkSession, path: str, **eq_filters) -> DataFrame:
@@ -93,7 +76,3 @@ def write_bucketed(
 def read_manifest(path: str) -> dict:
     with open(os.path.join(path, "_manifest.json")) as fh:
         return json.load(fh)
-
-
-def testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -10,9 +10,11 @@ killed run restarted with the same arguments converges to the identical
 output (kill/resume test: tests/test_resume.py).
 
 Scale notes: the bucket predicate is applied BEFORE the model stage, so a
-resume run pays Python cost only for unprocessed rows; per-bucket writes
-use dynamic partition overwrite semantics by writing into each bucket's own
-directory, which is idempotent under retry.
+resume run pays Python cost only for unprocessed rows; each group goes
+through the plain run's bucket writer (plans/pipeline.write_buckets), which
+replaces only that group's bucket directories (dynamic partition
+overwrite), so a retried group is idempotent. The caller then runs the
+plain run's tail, plans/pipeline.finish, over the completed table.
 """
 
 from __future__ import annotations
@@ -21,10 +23,9 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import thresholds as TH
-from ..plans.pipeline import decode_from_sink, encode_for_sink, verdict_plan
+from ..plans.pipeline import bucket_of, verdict_plan, write_buckets
 
 _CKPT = "_checkpoint.json"
 
@@ -68,31 +69,13 @@ def resume_materialize(
     if not todo:
         return done
 
-    # bucket is a pure function of url: filter before the expensive stage
-    payload = "text" if text_input else "html"
-    pages = pages.select("url", "warc_ts", payload).withColumn(
-        "__b", F.pmod(F.xxhash64("url"), F.lit(TH.N_BUCKETS)).cast("int")
-    )
     groups = [todo[i : i + group_size] for i in range(0, len(todo), group_size)]
     for gi, group in enumerate(groups):
         if fail_after_groups is not None and gi >= fail_after_groups:
             raise RuntimeError(f"injected failure before group {gi}")
-        part = pages.filter(F.col("__b").isin(group)).drop("__b")
-        plan = encode_for_sink(
-            verdict_plan(part, text_input=text_input)
-        ).repartition(len(group), "bucket")
-        (
-            plan.write.mode("overwrite")
-            .partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(pages_path)
-        )
+        # bucket is a pure function of url: filter before the expensive stage
+        part = pages.filter(bucket_of().isin(group))
+        write_buckets(verdict_plan(part, text_input=text_input), pages_path, group)
         done.update(group)
         _mark_done(out_dir, done)
     return done
-
-
-def read_resumed(spark: SparkSession, out_dir: str) -> DataFrame:
-    return decode_from_sink(
-        spark.read.parquet(os.path.join(out_dir, "pages_out"))
-    )

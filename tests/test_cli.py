@@ -67,13 +67,35 @@ def test_cli_summary_counts_match_sink(spark, pages_parquet, th_restore, extra):
     assert summary["dropped"] == summary["total_docs"] - summary["kept"]
 
 
-def test_cli_summary_counts_on_empty_input(spark, pages_parquet, th_restore):
-    """An empty input reports 0 docs and 0 kept, not a null keep sum."""
+@pytest.mark.parametrize("extra", [(), ("--resume",)], ids=["plain", "resume"])
+def test_cli_summary_counts_on_empty_input(spark, pages_parquet, th_restore, extra):
+    """An empty input reports 0 docs and 0 kept, not a null keep sum, on
+    both paths: the resumed sink is read back with the verdict schema, as
+    an empty sink has no data file to infer one from."""
     empty = tempfile.mkdtemp(prefix="cli_empty_")
     spark.read.parquet(pages_parquet).limit(0).write.mode("overwrite").parquet(empty)
-    out = _run(empty)
+    out = _run(empty, *extra)
     summary = json.load(open(os.path.join(out, "analysis_results.json")))
     assert (summary["total_docs"], summary["kept"], summary["dropped"]) == (0, 0, 0)
+
+
+def test_cli_plain_and_resume_write_the_same_tables(spark, pages_parquet, th_restore):
+    """A plain run and a --resume run into a fresh directory share one
+    tail after the sink: every table they derive from it, and the summary
+    file, are equal."""
+    plain = _run(pages_parquet, "--snapshot", "snap-1")
+    resumed = _run(pages_parquet, "--snapshot", "snap-1", "--resume")
+    for table in ("metrics", "lineage", "host_metrics", "reports"):
+        rows = [
+            sorted(
+                json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+                for r in spark.read.parquet(os.path.join(out, table)).collect()
+            )
+            for out in (plain, resumed)
+        ]
+        assert rows[0] == rows[1] and rows[0], table
+    assert (open(os.path.join(plain, "analysis_results.json")).read()
+            == open(os.path.join(resumed, "analysis_results.json")).read())
 
 
 def test_cli_multi_input_union(spark, pages_parquet, th_restore):
@@ -205,10 +227,10 @@ def test_cli_threshold_reaches_executors(pages_parquet, th_restore):
 def test_resume_with_skip_extract(spark, pages_parquet, th_restore):
     """A resumed --skip-extract run must process the text payload, not
     crash selecting the absent html column (round-4 review finding)."""
-    from rsmetacheck_spark.plans.pipeline import materialize, read_pages
-    from rsmetacheck_spark.streaming.incremental import (
-        read_resumed, resume_materialize,
+    from rsmetacheck_spark.plans.pipeline import (
+        materialize, read_pages, read_sink, verdict_plan,
     )
+    from rsmetacheck_spark.streaming.incremental import resume_materialize
 
     res = materialize(
         spark, read_pages(spark, pages_parquet), tempfile.mkdtemp(prefix="rse_")
@@ -216,7 +238,7 @@ def test_resume_with_skip_extract(spark, pages_parquet, th_restore):
     pre = res.pages_out.selectExpr("url", "warc_ts", "extracted_text AS text")
     out = tempfile.mkdtemp(prefix="rse_out_")
     resume_materialize(spark, pre, out, text_input=True)
-    resumed = read_resumed(spark, out)
+    resumed = read_sink(spark, out, verdict_plan(pre, text_input=True).schema)
     assert resumed.count() == res.pages_out.count()
     assert (resumed.filter("keep").count()
             == res.pages_out.filter("keep").count())

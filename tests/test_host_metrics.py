@@ -7,12 +7,12 @@ from pyspark.sql import functions as F
 
 from rsmetacheck_spark import synth
 from rsmetacheck_spark.operators.metrics import host_metrics_table
-from rsmetacheck_spark.plans.pipeline import run_pipeline
+from rsmetacheck_spark.plans.pipeline import materialize
 
 
-def test_salted_equals_unsalted(spark):
+def test_salted_equals_unsalted(spark, tmp_path):
     pages = spark.createDataFrame(synth.gen_pages(300, seed=11))
-    po = run_pipeline(pages).pages_out.cache()
+    po = materialize(spark, pages, str(tmp_path)).pages_out.cache()
     got = {
         r.host: (r.n_docs, r.n_kept, r.keep_pct)
         for r in host_metrics_table(po).collect()

@@ -6,12 +6,15 @@ from __future__ import annotations
 from rsmetacheck_spark import synth
 from rsmetacheck_spark import thresholds as TH
 from rsmetacheck_spark.oracle import oracle_labels
-from rsmetacheck_spark.plans.pipeline import run_pipeline
+from rsmetacheck_spark.plans.pipeline import materialize
 
 
-def test_parity_alt_seed(spark):
+def test_parity_alt_seed(spark, tmp_path):
     pages_pdf = synth.gen_pages(250, seed=777)
-    res = run_pipeline(spark.createDataFrame(pages_pdf).select("url", "warc_ts", "html"))
+    res = materialize(
+        spark, spark.createDataFrame(pages_pdf).select("url", "warc_ts", "html"),
+        str(tmp_path),
+    )
     got = res.pages_out.toPandas().set_index("url").sort_index()
     want = oracle_labels(pages_pdf).set_index("url").sort_index()
     assert (got["keep"] == want["keep"]).all()

@@ -8,12 +8,12 @@ import json
 from rsmetacheck_spark import synth
 from rsmetacheck_spark import thresholds as TH
 from rsmetacheck_spark.operators.report import per_doc_reports, summary_report
-from rsmetacheck_spark.plans.pipeline import run_pipeline
+from rsmetacheck_spark.plans.pipeline import materialize
 
 
-def test_reports(spark):
+def test_reports(spark, tmp_path):
     pages = spark.createDataFrame(synth.gen_pages(200, seed=3))
-    res = run_pipeline(pages)
+    res = materialize(spark, pages, str(tmp_path))
     po = res.pages_out.cache()
     rows = po.collect()
     reports = {r.url: json.loads(r.report) for r in per_doc_reports(po).collect()}
@@ -48,11 +48,11 @@ def test_reports(spark):
     po.unpersist()
 
 
-def test_report_checks_carry_lookup_tables(spark):
+def test_report_checks_carry_lookup_tables(spark, tmp_path):
     """Every hit rule renders a CheckResult entry with the static
     category/description/suggestion tables (json_ld_utils.py analog)."""
     pages = spark.createDataFrame(synth.gen_pages(80, seed=11))
-    res = run_pipeline(pages)
+    res = materialize(spark, pages, str(tmp_path))
     reports = [json.loads(r.report)
                for r in per_doc_reports(res.pages_out).collect()]
     assert reports

@@ -7,11 +7,8 @@ import pytest
 
 from rsmetacheck_spark import synth
 from rsmetacheck_spark import thresholds as TH
-from rsmetacheck_spark.streaming.incremental import (
-    load_done,
-    read_resumed,
-    resume_materialize,
-)
+from rsmetacheck_spark.plans.pipeline import read_sink, verdict_plan
+from rsmetacheck_spark.streaming.incremental import load_done, resume_materialize
 
 
 def _snapshot(df):
@@ -21,11 +18,12 @@ def _snapshot(df):
 
 def test_kill_and_resume_identical(spark, tmp_path):
     pages = spark.createDataFrame(synth.gen_pages(300, seed=9))
+    schema = verdict_plan(pages).schema
 
     ref_dir = str(tmp_path / "ref")
     done = resume_materialize(spark, pages, ref_dir)
     assert done == set(range(TH.N_BUCKETS))
-    want = _snapshot(read_resumed(spark, ref_dir))
+    want = _snapshot(read_sink(spark, ref_dir, schema))
     assert len(want) == 300
 
     # interrupted run: crash after 2 groups of 8 buckets
@@ -38,10 +36,10 @@ def test_kill_and_resume_identical(spark, tmp_path):
     # resume: only remaining buckets are processed
     done2 = resume_materialize(spark, pages, out_dir)
     assert done2 == set(range(TH.N_BUCKETS))
-    got = _snapshot(read_resumed(spark, out_dir))
+    got = _snapshot(read_sink(spark, out_dir, schema))
     assert got == want
 
     # idempotence: a third call is a no-op and output is unchanged
     done3 = resume_materialize(spark, pages, out_dir)
     assert done3 == done2
-    assert _snapshot(read_resumed(spark, out_dir)) == want
+    assert _snapshot(read_sink(spark, out_dir, schema)) == want
