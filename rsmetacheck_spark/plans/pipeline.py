@@ -239,7 +239,7 @@ def finish(
     spark: SparkSession,
     out_dir: str,
     schema: StructType,
-    input_snapshot: str = "synthetic",
+    input_snapshot: str,
     observed: dict | None = None,
 ) -> PipelineResult:
     """Derive metrics/lineage from the written sink and write them."""
