@@ -14,8 +14,9 @@ prints the summary JSON. A plain run writes every bucket of pages_out in
 one job (plans/pipeline.materialize); with --resume, only the buckets
 missing from the output checkpoint are written (streaming/incremental.py).
 Either way the same tail follows: plans/pipeline.finish reads the sink
-back and writes metrics / lineage, then host metrics, the per-doc reports
-and the summary come from that one PipelineResult.
+back and writes metrics / lineage / host metrics / the per-doc reports in
+one concurrent wave of jobs; the summary's totals are sums over the
+written lineage table, and its per-rule rows the written metrics table.
 
 CLI surface mirrors the reference cli.py:8-38:
   --input is multi-valued with per-item dispatch (cli.py:11-16's URL/file
@@ -161,11 +162,9 @@ def main(argv: list[str] | None = None) -> None:
 
     from pyspark.sql import functions as F
 
-    from rsmetacheck_spark.operators.metrics import host_metrics_table
-    from rsmetacheck_spark.operators.report import per_doc_reports, summary_report
+    from rsmetacheck_spark.operators.report import summary_report
     from rsmetacheck_spark.plans import pipeline
     from rsmetacheck_spark.session import get_spark
-    from rsmetacheck_spark.sources.tables import write_table
     from rsmetacheck_spark.streaming import incremental
 
     spark = get_spark("rsmetacheck_main", cores=args.cpus)
@@ -190,29 +189,24 @@ def main(argv: list[str] | None = None) -> None:
     )
     snapshot = args.snapshot or f"input:{','.join(args.input)}"
 
+    reports_dir = args.pitfalls_output or os.path.join(args.output, "reports")
     if args.resume:
         incremental.resume_materialize(spark, pages, args.output,
                                        text_input=args.skip_extract)
         schema = pipeline.verdict_plan(pages, text_input=args.skip_extract).schema
-        res = pipeline.finish(spark, args.output, schema, snapshot)
+        res = pipeline.finish(spark, args.output, schema, snapshot,
+                              reports_dir=reports_dir)
     else:
         res = pipeline.materialize(
             spark, pages, args.output, input_snapshot=snapshot,
-            text_input=args.skip_extract,
+            text_input=args.skip_extract, reports_dir=reports_dir,
         )
-    pages_out = res.pages_out
-
-    write_table(host_metrics_table(pages_out), os.path.join(args.output, "host_metrics"))
-    write_table(
-        per_doc_reports(pages_out),
-        args.pitfalls_output or os.path.join(args.output, "reports"),
-        partition_by=("bucket",),
-    )
-    # both summary numbers in ONE job over the sink; sum(keep) is null on
-    # empty input, where kept must read 0
-    counts = pages_out.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.coalesce(F.sum(F.col("keep").cast("long")), F.lit(0)).alias("kept"),
+    # both summary numbers from the written lineage table (one row per
+    # bucket), the same way on every path; its sums are null on an empty
+    # input, where both must read 0
+    counts = res.lineage.agg(
+        F.coalesce(F.sum("rows_in"), F.lit(0)).alias("total"),
+        F.coalesce(F.sum("rows_kept"), F.lit(0)).alias("kept"),
     ).first()
     summary = summary_report(res.metrics, counts.total, counts.kept)
     analysis_path = args.analysis_output or os.path.join(

@@ -13,10 +13,12 @@ element_at instead of a second explode.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import thresholds as TH
+from .sqltext import named_struct, quote
 
 
 def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
@@ -25,8 +27,12 @@ def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
     393-396), so consumers can rely on a fixed 15-row table. The hit
     aggregation right-joins a literal rule list (broadcast, 15 rows)."""
     spark = pages_out.sparkSession
+    # from a pandas frame, which goes through Arrow: a list of tuples
+    # would go through a pickled Python RDD (measured 0.37 s vs 0.14 s for
+    # the 15-row write). Not `FROM VALUES`: that makes `rule` non-nullable
+    # and changes the written schema.
     all_rules = spark.createDataFrame(
-        [(rule,) for rule, _sev in TH.RULES], "rule string"
+        pd.DataFrame({"rule": [rule for rule, _sev in TH.RULES]}), "rule string"
     )
     total = pages_out.select(F.count("*").alias("total_docs"))
     # A3 fidelity (detect_pitfalls_main.py:346-351): a hit counts once per
@@ -102,16 +108,15 @@ def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
 
 
 def _rule_hit_sums() -> F.Column:
-    entries = [
-        F.struct(
-            F.lit(rule).alias("key"),
-            F.sum(
-                F.element_at("findings", i + 1)["hit"].cast("long")
-            ).alias("value"),
-        )
+    """rule -> hit count map, one SQL expression (see sqltext.py)."""
+    entries = ", ".join(
+        named_struct({
+            "key": quote(rule),
+            "value": f"sum(CAST(element_at(findings, {i + 1}).hit AS BIGINT))",
+        })
         for i, (rule, _sev) in enumerate(TH.RULES)
-    ]
-    return F.map_from_entries(F.array(*entries))
+    )
+    return F.expr(f"map_from_entries(array({entries}))")
 
 
 def host_metrics_table(pages_out: DataFrame) -> DataFrame:

@@ -19,60 +19,50 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import thresholds as TH
+from .sqltext import named_struct, quote
 
 
-def _rule_lookup(idx: int) -> F.Column:
+def _rule_lookup(idx: int) -> str:
     """Literal map rule -> RULE_INFO[idx] (the reference's static
     description/category/suggestion tables, json_ld_utils.py:53-91,
-    336-376, 379-418 — broadcast-free: a create_map literal folds into
-    the plan as a constant)."""
-    entries: list[F.Column] = []
-    for rule, info in TH.RULE_INFO.items():
-        entries.extend([F.lit(rule), F.lit(info[idx])])
-    return F.create_map(*entries)
+    336-376, 379-418 — broadcast-free: a map literal folds into the plan
+    as a constant)."""
+    entries = ", ".join(
+        f"{quote(rule)}, {quote(info[idx])}" for rule, info in TH.RULE_INFO.items()
+    )
+    return f"map({entries})"
 
 
 def per_doc_reports(pages_out: DataFrame) -> DataFrame:
     """Flagged docs -> (url, bucket, report:string JSON). Each hit rule
     renders a CheckResult-shaped entry (checkId/category/process/
-    suggestion/evidence, json_ld_utils.py:447-493)."""
-    hits = F.filter("findings", lambda f: f["hit"])
-    first_drop = F.try_element_at(
-        F.filter("findings", lambda f: f["hit"] & (f["severity"] == TH.DROP)), F.lit(1)
+    suggestion/evidence, json_ld_utils.py:447-493). The report is one SQL
+    expression (see sqltext.py)."""
+    hits = "filter(findings, f -> f.hit)"
+    first_drop = (
+        f"try_element_at(filter(findings, f -> f.hit AND f.severity = "
+        f"{quote(TH.DROP)}), 1).rule"
     )
-    cat_m, desc_m, sugg_m = _rule_lookup(0), _rule_lookup(1), _rule_lookup(2)
-    checks = F.transform(
-        hits,
-        lambda f: F.struct(
-            f["rule"].alias("checkId"),
-            cat_m[f["rule"]].alias("category"),
-            desc_m[f["rule"]].alias("process"),
-            sugg_m[f["rule"]].alias("suggestion"),
-            f["evidence"].alias("evidence"),
-        ),
-    )
-    report = F.to_json(
-        F.struct(
-            F.col("url").alias("url"),
-            F.col("lang_pred").alias("lang"),
-            F.col("keep").alias("keep"),
-            F.col("first_drop_rule").alias("firstDropRule"),
-            F.col("hit_rules").alias("checkIds"),
-            F.col("evidence3").alias("evidence"),
-            F.col("checks").alias("checks"),
-        )
-    )
+    check = named_struct({
+        "checkId": "f.rule",
+        "category": f"{_rule_lookup(0)}[f.rule]",
+        "process": f"{_rule_lookup(1)}[f.rule]",
+        "suggestion": f"{_rule_lookup(2)}[f.rule]",
+        "evidence": "f.evidence",
+    })
+    report = "to_json(" + named_struct({
+        "url": "url",
+        "lang": "lang_pred",
+        "keep": "keep",
+        "firstDropRule": first_drop,
+        "checkIds": f"transform({hits}, f -> f.rule)",
+        "evidence": f"slice(transform({hits}, f -> f.evidence), 1, 3)",
+        "checks": f"transform({hits}, f -> {check})",
+    }) + ")"
     return (
         pages_out
-        .withColumn("hit_rules", F.transform(hits, lambda f: f["rule"]))
-        .withColumn("first_drop_rule", first_drop["rule"])
-        .withColumn(
-            "evidence3",
-            F.slice(F.transform(hits, lambda f: f["evidence"]), 1, 3),
-        )
-        .withColumn("checks", checks)
-        .filter(F.size("hit_rules") > 0)
-        .select("url", "bucket", report.alias("report"))
+        .filter(F.expr(f"size({hits}) > 0"))
+        .select("url", "bucket", F.expr(report).alias("report"))
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .. import thresholds as TH
 from . import rules as R
+from .sqltext import ident, named_struct, quote
 
 FINDING_SCHEMA = (
     "array<struct<rule:string,hit:boolean,severity:string,metric:double,evidence:string>>"
@@ -54,31 +55,23 @@ def with_findings(df: DataFrame) -> DataFrame:
     # is a one-format_string codegen expression. Evidence text is rendered
     # ONLY for hits — the reference renders evidence only for flagged
     # verdicts (json_ld_utils.py:447-493), and null evidence for the ~13
-    # non-hit rules per doc saves ~1 KB/row at the sink.
-    finding_structs = [
-        F.struct(
-            F.lit(rule).alias("rule"),
-            F.col(f"__h_{rule}").alias("hit"),
-            F.lit(severity).alias("severity"),
-            F.col(f"__m_{rule}").alias("metric"),
-            F.when(
-                F.col(f"__h_{rule}"),
-                F.format_string(
-                    f"%s: {TH.RULE_INFO[rule][1]} (metric=%s)",
-                    F.lit(rule), F.col(f"__m_{rule}").cast("string"),
-                ),
-            ).alias("evidence"),
-        )
-        for rule, severity in TH.RULES
-    ]
-    drop_hits = [
-        F.col(f"__h_{rule}") for rule, sev in TH.RULES if sev == TH.DROP
-    ]
-    dropped = drop_hits[0]
-    for h in drop_hits[1:]:
-        dropped = dropped | h
-    df = df.withColumn("findings", F.array(*finding_structs))
-    df = df.withColumn("keep", ~dropped)
+    # non-hit rules per doc saves ~1 KB/row at the sink. Both columns are
+    # one SQL expression each (sqltext.py: one parse, not a Column tree).
+    finding_structs = []
+    for rule, severity in TH.RULES:
+        hit, metric = ident(f"__h_{rule}"), ident(f"__m_{rule}")
+        template = quote(f"%s: {TH.RULE_INFO[rule][1]} (metric=%s)")
+        evidence = (f"CASE WHEN {hit} THEN format_string({template}, "
+                    f"{quote(rule)}, CAST({metric} AS STRING)) END")
+        finding_structs.append(named_struct({
+            "rule": quote(rule), "hit": hit, "severity": quote(severity),
+            "metric": metric, "evidence": evidence,
+        }))
+    drop_hits = [ident(f"__h_{rule}") for rule, sev in TH.RULES if sev == TH.DROP]
+    df = df.withColumns({
+        "findings": F.expr(f"array({', '.join(finding_structs)})"),
+        "keep": F.expr(f"NOT ({' OR '.join(drop_hits) or 'false'})"),
+    })
     drop_helpers = list(metric_cols.keys()) + list(hit_cols.keys())
     if lowtext is not None:
         drop_helpers.append("__lowtext")

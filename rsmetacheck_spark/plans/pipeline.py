@@ -6,14 +6,17 @@ detect_pitfalls_main.py:41-412, recast as one lazy DataFrame graph):
          stats; ONE Arrow round trip, per-executor model singletons)
       -> native-expr rules -> findings array + keep gate
       -> write_buckets: pages_out, partitioned by url-hash bucket
-      -> finish: metrics / lineage FROM THE WRITTEN TABLE
+      -> finish: metrics / lineage [/ host_metrics / reports] FROM THE
+         WRITTEN TABLE, all in one concurrent wave of jobs
 
 This module owns everything after the verdicts, for both ways a run
 writes the sink. `materialize` writes every bucket in one job; a resumed
 run (streaming/incremental.py) writes the missing buckets group by group
 through the same `write_buckets`. Both then call the same `finish`, which
-reads the sink back with the verdict schema (`read_sink`) and derives
-metrics and lineage from it.
+reads the sink back with the verdict schema (`read_sink`) and submits
+every table derived from it at once: metrics and lineage always, host
+metrics and the per-doc reports when given a reports directory (the CLI
+passes one; bench.py's call does not).
 
 Why metrics read the sink instead of re-aggregating the live plan: the
 model stage is the expensive part; aggregating the written table scans only
@@ -33,6 +36,7 @@ Scale notes (the 100 TB story):
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -40,8 +44,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .. import thresholds as TH
-from ..operators.metrics import lineage_table, rule_metrics_table
+from ..operators.metrics import host_metrics_table, lineage_table, rule_metrics_table
 from ..operators.model_stage import apply_model_stage
+from ..operators.report import per_doc_reports
 from ..operators.verdicts import with_findings
 from ..sources.tables import write_table
 
@@ -241,20 +246,35 @@ def finish(
     schema: StructType,
     input_snapshot: str,
     observed: dict | None = None,
+    reports_dir: str | None = None,
 ) -> PipelineResult:
-    """Derive metrics/lineage from the written sink and write them."""
+    """Derive every table from the written sink, in one concurrent wave.
+
+    Always writes metrics and lineage; with a `reports_dir`, also
+    host_metrics and the per-doc reports (into `reports_dir`). The jobs
+    are independent small scans of the same sink, so they are submitted
+    together: the scheduler interleaves their tasks instead of running
+    one job's tail after another's."""
     pages_out = read_sink(spark, out_dir, schema)
     metrics = rule_metrics_table(pages_out)
     lineage = lineage_table(pages_out, input_snapshot)
-    # Two independent small aggregation jobs over the sink — submit them
-    # concurrently so the scheduler interleaves their tasks (halves the
-    # serial tail of the run).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as ex:
-        fm = ex.submit(write_table, metrics, os.path.join(out_dir, "metrics"))
-        fl = ex.submit(write_table, lineage, os.path.join(out_dir, "lineage"))
-        fm.result(), fl.result()
+    writes = [
+        (metrics, os.path.join(out_dir, "metrics"), ()),
+        (lineage, os.path.join(out_dir, "lineage"), ()),
+    ]
+    if reports_dir is not None:
+        writes += [
+            (host_metrics_table(pages_out), os.path.join(out_dir, "host_metrics"), ()),
+            (per_doc_reports(pages_out), reports_dir, ("bucket",)),
+        ]
+    with ThreadPoolExecutor(len(writes)) as ex:
+        # write_table is looked up in this module at call time, so a
+        # wrapper installed on the module (perfbench's tracer) sees every
+        # write of the wave
+        futures = [ex.submit(write_table, df, path, partition_by=parts)
+                   for df, path, parts in writes]
+        for f in futures:
+            f.result()
     return PipelineResult(
         pages_out=pages_out,
         metrics=spark.read.schema(metrics.schema).parquet(os.path.join(out_dir, "metrics")),
@@ -269,6 +289,7 @@ def materialize(
     out_dir: str,
     input_snapshot: str = "synthetic",
     text_input: bool = False,
+    reports_dir: str | None = None,
 ) -> PipelineResult:
     """Write every bucket of pages_out in one job, then `finish`."""
     # Size-bound parallelism: at 100 TB the scan naturally yields
@@ -289,7 +310,7 @@ def materialize(
         pages = pages.repartition(target)
     plan = verdict_plan(pages, text_input=text_input)
     observed = write_buckets(plan, os.path.join(out_dir, "pages_out"))
-    return finish(spark, out_dir, plan.schema, input_snapshot, observed)
+    return finish(spark, out_dir, plan.schema, input_snapshot, observed, reports_dir)
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:

@@ -55,28 +55,62 @@ def test_cli_default_run(spark, pages_parquet, th_restore):
     assert os.path.isdir(os.path.join(out, "metrics"))
 
 
+def _run_capturing(monkeypatch, pages_parquet, *extra):
+    """`_run`, also returning the plain run's PipelineResult (None after
+    --resume, which does not go through materialize)."""
+    from rsmetacheck_spark.plans import pipeline
+
+    captured = {}
+    materialize = pipeline.materialize
+
+    def capture(*a, **kw):
+        captured["res"] = materialize(*a, **kw)
+        return captured["res"]
+
+    monkeypatch.setattr(pipeline, "materialize", capture)
+    return _run(pages_parquet, *extra), captured.get("res")
+
+
+def _lineage_sums(spark, out):
+    return tuple(spark.read.parquet(os.path.join(out, "lineage")).selectExpr(
+        "coalesce(sum(rows_in), 0)", "coalesce(sum(rows_kept), 0)").first())
+
+
 @pytest.mark.parametrize("extra", [(), ("--resume",)], ids=["plain", "resume"])
-def test_cli_summary_counts_match_sink(spark, pages_parquet, th_restore, extra):
-    """total_docs and kept in analysis_results.json are the sink's row
-    count and keep count, on the plain and the --resume path."""
-    out = _run(pages_parquet, *extra)
+def test_cli_summary_counts_match_sink(spark, pages_parquet, th_restore,
+                                       monkeypatch, extra):
+    """total_docs and kept in analysis_results.json are the written
+    lineage table's sums, and equal the sink's row count and keep count
+    and (plain run) the counters observed during the sink write."""
+    out, res = _run_capturing(monkeypatch, pages_parquet, *extra)
     summary = json.load(open(os.path.join(out, "analysis_results.json")))
     sink = spark.read.parquet(os.path.join(out, "pages_out"))
     assert summary["total_docs"] == sink.count() == 300
     assert summary["kept"] == sink.filter("keep").count()
     assert summary["dropped"] == summary["total_docs"] - summary["kept"]
+    counts = (summary["total_docs"], summary["kept"])
+    assert _lineage_sums(spark, out) == counts
+    if extra:
+        assert res is None
+    else:
+        assert (res.observed["n_docs"], res.observed["n_keep"]) == counts
 
 
 @pytest.mark.parametrize("extra", [(), ("--resume",)], ids=["plain", "resume"])
-def test_cli_summary_counts_on_empty_input(spark, pages_parquet, th_restore, extra):
-    """An empty input reports 0 docs and 0 kept, not a null keep sum, on
-    both paths: the resumed sink is read back with the verdict schema, as
-    an empty sink has no data file to infer one from."""
+def test_cli_summary_counts_on_empty_input(spark, pages_parquet, th_restore,
+                                           monkeypatch, extra):
+    """An empty input reports 0 docs and 0 kept, not a null sum of the
+    empty lineage table, on both paths: the resumed sink is read back with
+    the verdict schema, as an empty sink has no data file to infer one
+    from."""
     empty = tempfile.mkdtemp(prefix="cli_empty_")
     spark.read.parquet(pages_parquet).limit(0).write.mode("overwrite").parquet(empty)
-    out = _run(empty, *extra)
+    out, res = _run_capturing(monkeypatch, empty, *extra)
     summary = json.load(open(os.path.join(out, "analysis_results.json")))
     assert (summary["total_docs"], summary["kept"], summary["dropped"]) == (0, 0, 0)
+    assert _lineage_sums(spark, out) == (0, 0)
+    if not extra:
+        assert res.observed == {"n_docs": 0, "n_keep": 0, "n_model_errors": 0}
 
 
 def test_cli_plain_and_resume_write_the_same_tables(spark, pages_parquet, th_restore):
@@ -114,6 +148,14 @@ def test_cli_rules_subset(spark, pages_parquet, th_restore):
     ]
     # fewer drop rules => keep rate can only rise vs the full registry
     assert summary["kept"] >= 0
+
+
+def test_cli_rules_subset_without_drop_rule(spark, pages_parquet, th_restore):
+    """With only warn-severity rules selected, nothing can drop a doc."""
+    out = _run(pages_parquet, "--rules", "R011_pii_email,R015_freshness")
+    summary = json.load(open(os.path.join(out, "analysis_results.json")))
+    assert summary["total_docs"] == summary["kept"] == 300
+    assert sum(r["hits"] for r in summary["rules"]) > 0
 
 
 def test_cli_threshold_override_changes_keeps(spark, pages_parquet, th_restore):

@@ -63,3 +63,35 @@ def test_report_checks_carry_lookup_tables(spark, tmp_path):
             assert c["category"] == cat
             assert c["process"] == desc
             assert c["suggestion"] == sugg
+
+
+def test_registry_text_reaches_reports_verbatim(spark, tmp_path, monkeypatch):
+    """Registry text is spliced into generated SQL: quotes, backslashes
+    and backslash sequences Spark would unescape must come out exactly as
+    written, in the finding's evidence and in the report's check entry.
+    The CLI can set this text (--threshold RULE_INFO=...)."""
+    rule = "R001_doc_length"
+    cat = "it's a \\ \"cat\""
+    desc = "don't \\n stop \\u0041 \"here\" \\' \\"
+    sugg = "a'b \"c\" \\\\ end\\"
+    monkeypatch.setitem(TH.RULE_INFO, rule, (cat, desc, sugg))
+    pages = spark.createDataFrame(synth.gen_pages(120, seed=3))
+    res = materialize(spark, pages, str(tmp_path / "out"),
+                      reports_dir=str(tmp_path / "reports"))
+    evidence = {
+        r.url: r.ev for r in res.pages_out.selectExpr(
+            "url", "try_element_at(filter(findings, f -> f.hit AND "
+            f"f.rule = '{rule}'), 1).evidence AS ev"
+        ).where("ev IS NOT NULL").collect()
+    }
+    assert evidence
+    for ev in evidence.values():
+        assert ev.startswith(f"{rule}: {desc} (metric="), ev
+    reports = [json.loads(r.report)
+               for r in spark.read.parquet(str(tmp_path / "reports")).collect()]
+    checks = [(rep["url"], c) for rep in reports for c in rep["checks"]
+              if c["checkId"] == rule]
+    assert len(checks) == len(evidence)
+    for url, c in checks:
+        assert (c["category"], c["process"], c["suggestion"]) == (cat, desc, sugg)
+        assert c["evidence"] == evidence[url]
