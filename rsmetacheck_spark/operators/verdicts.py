@@ -21,10 +21,6 @@ from .. import thresholds as TH
 from . import rules as R
 from .sqltext import ident, named_struct, quote
 
-FINDING_SCHEMA = (
-    "array<struct<rule:string,hit:boolean,severity:string,metric:double,evidence:string>>"
-)
-
 
 def with_findings(df: DataFrame) -> DataFrame:
     """Expects model-stage columns; adds findings + keep."""
