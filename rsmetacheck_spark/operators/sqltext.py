@@ -7,8 +7,9 @@ every Column node is at least one py4j round trip, and the verdict plan
 alone used to cost thousands of them per build.
 
 Every string literal that goes into that text passes through `quote`, and
-every column name through `ident`, so registry text (rule descriptions,
-suggestions, overridable from the CLI) can hold any character.
+every column name generated from the registry through `ident`, so registry
+text (rule descriptions and suggestions, which the CLI's --threshold can
+override) can hold any character.
 """
 
 from __future__ import annotations
