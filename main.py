@@ -16,7 +16,8 @@ missing from the output checkpoint are written (streaming/incremental.py).
 Either way the same tail follows: plans/pipeline.finish reads the sink
 back and writes metrics / lineage / host metrics / the per-doc reports in
 one concurrent wave of jobs; the summary's totals are sums over the
-written lineage table, and its per-rule rows the written metrics table.
+written lineage rows, and its per-rule rows the written metrics rows,
+both observed on those writes.
 
 CLI surface mirrors the reference cli.py:8-38:
   --input is multi-valued with per-item dispatch (cli.py:11-16's URL/file
@@ -160,8 +161,6 @@ def main(argv: list[str] | None = None) -> None:
 
     from functools import reduce
 
-    from pyspark.sql import functions as F
-
     from rsmetacheck_spark.operators.report import summary_report
     from rsmetacheck_spark.plans import pipeline
     from rsmetacheck_spark.session import get_spark
@@ -201,14 +200,9 @@ def main(argv: list[str] | None = None) -> None:
             spark, pages, args.output, input_snapshot=snapshot,
             text_input=args.skip_extract, reports_dir=reports_dir,
         )
-    # both summary numbers from the written lineage table (one row per
-    # bucket), the same way on every path; its sums are null on an empty
-    # input, where both must read 0
-    counts = res.lineage.agg(
-        F.coalesce(F.sum("rows_in"), F.lit(0)).alias("total"),
-        F.coalesce(F.sum("rows_kept"), F.lit(0)).alias("kept"),
-    ).first()
-    summary = summary_report(res.metrics, counts.total, counts.kept)
+    # the summary's numbers were observed on the lineage and metrics
+    # writes, the same way on every path: no job of their own
+    summary = summary_report(res.rules, res.total, res.kept)
     analysis_path = args.analysis_output or os.path.join(
         args.output, "analysis_results.json"
     )

@@ -4,37 +4,48 @@ analog of analysis_results.json, detect_pitfalls_main.py:385-394).
 metrics:  rule, hits, pct (round 2), lang_counts map<lang,count>
 lineage:  partition_id, input_snapshot, rows_in, rows_kept, rule_hits map
 
-Shuffle story: one explode -> partial-aggregated groupBy(rule) (map-side
-combine is automatic for count/sum); the total-docs scalar joins back via a
-broadcast of a 1-row DataFrame, not a window over the full data. The
-findings array is in fixed RULES order (verdicts.py), so per-rule sums use
-element_at instead of a second explode.
+Shuffle story: metrics is one explode -> partial-aggregated groupBy(rule,
+lang) (map-side combine is automatic for count), whose few rows are
+collected: the document total rides the same aggregation as a NULL rule,
+not a second scan or a join. The findings array is in fixed RULES order
+(verdicts.py), so lineage's per-rule sums use element_at instead of an
+explode.
 """
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, MapType, StringType, StructField, StructType
 
 from .. import thresholds as TH
 from .sqltext import named_struct, quote
 
 
+# the written schema, nullability included (tests/test_cli_golden.py pins
+# it): `rule` nullable, `hits` and `lang_counts` not; `pct` is derived
+_METRICS_COUNTS = StructType([
+    StructField("rule", StringType()),
+    StructField("hits", LongType(), False),
+    StructField("total_docs", LongType(), False),
+    StructField("lang_counts", MapType(StringType(), LongType()), False),
+])
+
+
 def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
     """Every registered rule always appears, zero-hit rules included — the
     reference emits every detector with count 0 (detect_pitfalls_main.py:
-    393-396), so consumers can rely on a fixed 15-row table. The hit
-    aggregation right-joins a literal rule list (broadcast, 15 rows)."""
-    spark = pages_out.sparkSession
-    # from a pandas frame, which goes through Arrow: a list of tuples
-    # goes through a pickled Python RDD (the metrics write at 4,000 docs on
-    # 4 cores: 0.31-0.52 s that way, 0.22-0.27 s this way). Not `FROM
-    # VALUES`: that makes `rule` non-nullable and changes the written schema.
-    all_rules = spark.createDataFrame(
-        pd.DataFrame({"rule": [rule for rule, _sev in TH.RULES]}), "rule string"
-    )
-    total = pages_out.select(F.count("*").alias("total_docs"))
+    393-396), so consumers can rely on a fixed 15-row table.
+
+    ONE scan of the sink: each document contributes its hit rules plus
+    one NULL entry standing for the document itself, crossed with its
+    langs and grouped by (rule, lang). The result is collected — at most
+    (|RULES|+1)·(|langs|+1) rows, whatever the corpus size — and the
+    table is built from it on the driver, so there is no join to a rule
+    list and no second scan for the document total."""
     # A3 fidelity (detect_pitfalls_main.py:346-351): a hit counts once per
     # TARGET LANGUAGE of the document (multi-valued explode over the
     # langid top-2 list when present), while `hits` stays doc-level —
@@ -43,67 +54,62 @@ def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
         F.col("lang_top2") if "lang_top2" in pages_out.columns
         else F.array("lang_pred")
     )
-    # ONE pass over the sink for BOTH grains (the doc-level `hits` and
-    # the per-language counts used to need two scans + two explodes):
-    # posexplode_outer tags each finding's first lang row (pos 0; pos
-    # NULL for the empty-langs model-error rows, which must still count
-    # as hits), so hits = sum of first-flags while lang counts group the
-    # non-null lang rows — identical numbers, half the sink scans.
-    hit_findings = (
+    # the findings plus a NULL entry standing for the document (explode,
+    # not filter/transform lambdas, which are interpreted: 0.34 s against
+    # 0.22 s per 100k docs on 4 cores); explode_outer makes a NULL
+    # findings array that entry too. posexplode_outer then tags each
+    # entry's first lang row (pos 0; pos NULL for the empty-langs
+    # model-error rows, which must still count), so per-document numbers
+    # are sums of first-flags while the per-language counts group the
+    # non-null lang rows
+    doc = F.lit(None).cast(pages_out.schema["findings"].dataType.elementType)
+    counts = (
         pages_out
-        .select(langs.alias("langs"), F.explode("findings").alias("f"))
-        .filter(F.col("f.hit"))
+        .select(
+            langs.alias("langs"),
+            F.explode_outer(F.concat("findings", F.array(doc))).alias("f"),
+        )
+        .filter(F.col("f").isNull() | F.col("f.hit"))
         .select(
             F.col("f.rule").alias("rule"),
             F.posexplode_outer("langs").alias("pos", "lang"),
         )
-    )
-    per_rule_lang = (
-        hit_findings
         .groupBy("rule", "lang")
         .agg(
             F.count("*").alias("n"),
-            F.sum(
-                F.when(F.coalesce(F.col("pos"), F.lit(0)) == 0, 1).otherwise(0)
-            ).alias("nf"),
+            F.count_if(F.coalesce("pos", F.lit(0)) == 0).alias("nf"),
         )
+        .collect()
     )
-    agg = (
-        per_rule_lang
-        .groupBy("rule")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            F.col("lang").isNotNull(), F.struct("lang", "n")
-                        )
-                    )
-                )
-            ).alias("lang_counts"),
-            F.sum("nf").alias("hits"),
-        )
+    total, hits, lang_counts = 0, Counter(), defaultdict(dict)
+    for r in counts:
+        if r.rule is None:
+            total += r.nf
+            continue
+        hits[r.rule] += r.nf
+        if r.lang is not None:
+            lang_counts[r.rule][r.lang] = r.n
+    rules = [rule for rule, _sev in TH.RULES]
+    # from a pandas frame: a local relation through Arrow (a list of
+    # tuples goes through a pickled Python RDD)
+    table = pages_out.sparkSession.createDataFrame(
+        pd.DataFrame({
+            "rule": rules,
+            "hits": [hits[rule] for rule in rules],
+            "total_docs": [total] * len(rules),
+            "lang_counts": [dict(sorted(lang_counts[rule].items())) for rule in rules],
+        }),
+        _METRICS_COUNTS,
     )
-    empty_map = F.map_from_entries(
-        F.array().cast("array<struct<lang:string,n:bigint>>")
-    )
-    return (
-        all_rules
-        .join(F.broadcast(agg), "rule", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "rule",
-            F.coalesce("hits", F.lit(0)).alias("hits"),
-            # greatest(total, 1): a zero-row corpus must yield pct=0.0,
-            # not an ANSI DIVIDE_BY_ZERO that aborts the metrics write
-            # (found by the empty-input observed-counters probe)
-            F.round(
-                F.coalesce("hits", F.lit(0)) * 100.0
-                / F.greatest(F.col("total_docs"), F.lit(1)),
-                2,
-            ).alias("pct"),
-            F.coalesce("lang_counts", empty_map).alias("lang_counts"),
-        )
+    return table.select(
+        "rule",
+        "hits",
+        # greatest(total, 1): a zero-row corpus must yield pct=0.0, not an
+        # ANSI DIVIDE_BY_ZERO that aborts the metrics write
+        F.round(
+            F.col("hits") * 100.0 / F.greatest("total_docs", F.lit(1)), 2
+        ).alias("pct"),
+        "lang_counts",
     )
 
 

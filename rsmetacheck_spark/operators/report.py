@@ -7,8 +7,9 @@ Spark-native JSON assembly (S6/S7, SURVEY §2.1):
    * first failing drop-rule = first-match-wins (F4 shape, p004.py:78)
    * evidence truncated to 3 entries (O3 shape, json_ld_utils.py:201-202)
  - run summary assembled from the tiny metrics table (S7,
-   analysis_results.json analog, detect_pitfalls_main.py:385-398) —
-   driver-side collect of ~15 rows is the sanctioned exception.
+   analysis_results.json analog, detect_pitfalls_main.py:385-398): its
+   ~15 rows reach the driver as an Observation on the metrics write
+   (plans/pipeline.finish), not as a separate collect.
 """
 
 from __future__ import annotations
@@ -66,17 +67,15 @@ def per_doc_reports(pages_out: DataFrame) -> DataFrame:
     )
 
 
-def summary_report(metrics: DataFrame, total_docs: int, kept: int) -> str:
-    rows = sorted(
-        (r.asDict(recursive=True) for r in metrics.collect()),
-        key=lambda r: r["rule"],
-    )
+def summary_report(rules: list[dict], total_docs: int, kept: int) -> str:
+    """The run summary from the metrics rows (dicts, as
+    `PipelineResult.rules` carries them) and the document totals."""
     return json.dumps(
         {
             "total_docs": total_docs,
             "kept": kept,
             "dropped": total_docs - kept,
-            "rules": rows,
+            "rules": sorted(rules, key=lambda r: r["rule"]),
         },
         default=str,
     )

@@ -32,12 +32,18 @@ def url_host(url: Column) -> Column:
 def boilerplate_hit(text: Column, lowered: bool = False) -> Column:
     """`lowered=True` means `text` is ALREADY lowercased (a named
     column): without it, Catalyst inlines `lower(text)` into every
-    phrase's instr, lowercasing the full text |PHRASES| times per row —
-    measured seconds per million docs in the verdict stage."""
+    phrase's probe, lowercasing the full text |PHRASES| times per row —
+    measured seconds per million docs in the verdict stage.
+
+    `contains` is a byte search, where `instr` steps through characters
+    to return a position; a valid UTF-8 phrase can only match valid UTF-8
+    text at a character boundary, so both give the same answer (16,000
+    docs on 4 cores: the probes took 0.216 s with instr, 0.036 s this
+    way, with identical hits)."""
     low = text if lowered else F.lower(text)
     hit = F.lit(False)
     for p in TH.BOILERPLATE_PHRASES:
-        hit = hit | (F.instr(low, p) > 0)
+        hit = hit | low.contains(p)
     return hit
 
 

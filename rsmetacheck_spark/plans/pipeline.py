@@ -29,8 +29,11 @@ Scale notes (the 100 TB story):
  - only shuffle in the whole plan: the partitionBy write (hash-bucketed,
    uniform by construction — url hash, no hot keys) and the tiny
    (rule, lang) metric aggregation of pre-combined partial counts.
- - no collect() anywhere; the report is assembled from the 15-row metrics
-   table.
+ - the driver reads two things, both bounded by the rule registry, not by
+   the corpus: the (rule, lang) metric counts, at most
+   (|RULES|+1)·(|langs|+1) rows, collected to build the 15-row metrics
+   table; and the summary's numbers, observed on the metrics and lineage
+   writes. Nothing else is collected.
 """
 
 from __future__ import annotations
@@ -61,6 +64,12 @@ class PipelineResult:
     pages_out: DataFrame
     metrics: DataFrame
     lineage: DataFrame
+    # the run summary's numbers, observed on the metrics and lineage
+    # writes (see finish): the document and keep totals, and the written
+    # metrics rows as dicts, in no particular order
+    total: int
+    kept: int
+    rules: list[dict]
     # global counters observed DURING the sink write (free — no extra
     # scan or job; see the Observation in write_buckets); None after a
     # resumed run, whose writes each saw only part of the table
@@ -199,12 +208,14 @@ def write_buckets(
     # Cluster by bucket before the partitioned write: otherwise every write
     # task emits a file per bucket (tasks × buckets tiny files — observed
     # 2048 files for a 4k-doc bench, dominating both the write and every
-    # downstream scan). One shuffle of the verdict rows -> one file per
-    # bucket. The model stage still parallelizes at the scan partitioning,
-    # upstream of this exchange.
-    rows = encode_for_sink(plan).repartition(
-        len(buckets) if buckets else TH.N_BUCKETS, "bucket"
-    )
+    # downstream scan). Hash partitioning never splits a bucket across
+    # tasks, so this still writes one file per bucket, from as many tasks
+    # as the session's shuffle partitions, which AQE coalesces further —
+    # not one task per bucket: at bench scale each reduce task is fixed
+    # cost (4,000 docs on 4 cores: the 32 bucket files took 0.44 s from 32
+    # tasks, 0.25 s from 8). The model stage still parallelizes at the scan
+    # partitioning, upstream of this exchange.
+    rows = encode_for_sink(plan).repartition("bucket")
     # Global counters ride the WRITE action itself (AggregatingAccumulator
     # under CollectMetrics): at 100 TB this is n_docs/n_keep/n_errors for
     # free — no separate count job, no second scan of the sink. The
@@ -254,31 +265,62 @@ def finish(
     host_metrics and the per-doc reports (into `reports_dir`). The jobs
     are independent small scans of the same sink, so they are submitted
     together: the scheduler interleaves their tasks instead of running
-    one job's tail after another's."""
+    one job's tail after another's. Each table's plan is built inside its
+    own wave thread too (the metrics table runs its aggregation job while
+    it is built).
+
+    The summary numbers ride the writes as `Observation`s: total/kept sum
+    the lineage rows, and the metrics rows are collected as they are
+    written (15 rows), so the summary costs no job of its own."""
     pages_out = read_sink(spark, out_dir, schema)
-    metrics = rule_metrics_table(pages_out)
-    lineage = lineage_table(pages_out, input_snapshot)
+    metrics_obs, lineage_obs = Observation("metrics_rows"), Observation("lineage_sums")
+
+    def metrics() -> DataFrame:
+        df = rule_metrics_table(pages_out)
+        return df.observe(
+            metrics_obs, F.collect_list(F.struct(*df.columns)).alias("rows")
+        )
+
+    def lineage() -> DataFrame:
+        # the sums are null over an empty lineage table, where both read 0
+        return lineage_table(pages_out, input_snapshot).observe(
+            lineage_obs,
+            F.coalesce(F.sum("rows_in"), F.lit(0)).alias("total"),
+            F.coalesce(F.sum("rows_kept"), F.lit(0)).alias("kept"),
+        )
+
     writes = [
         (metrics, os.path.join(out_dir, "metrics"), ()),
         (lineage, os.path.join(out_dir, "lineage"), ()),
     ]
     if reports_dir is not None:
         writes += [
-            (host_metrics_table(pages_out), os.path.join(out_dir, "host_metrics"), ()),
-            (per_doc_reports(pages_out), reports_dir, ("bucket",)),
+            (lambda: host_metrics_table(pages_out),
+             os.path.join(out_dir, "host_metrics"), ()),
+            (lambda: per_doc_reports(pages_out), reports_dir, ("bucket",)),
         ]
-    with ThreadPoolExecutor(len(writes)) as ex:
+
+    def build_and_write(build, path: str, parts: tuple[str, ...]) -> DataFrame:
+        df = build()
         # write_table is looked up in this module at call time, so a
         # wrapper installed on the module (perfbench's tracer) sees every
         # write of the wave
-        futures = [ex.submit(write_table, df, path, partition_by=parts)
-                   for df, path, parts in writes]
-        for f in futures:
-            f.result()
+        write_table(df, path, partition_by=parts)
+        return df
+
+    with ThreadPoolExecutor(len(writes)) as ex:
+        futures = [ex.submit(build_and_write, *w) for w in writes]
+        written = [f.result() for f in futures]
+    # an Observation is read only once every write has returned: a failed
+    # write raises above instead of leaving get() waiting for its metrics
+    counts = lineage_obs.get
     return PipelineResult(
         pages_out=pages_out,
-        metrics=spark.read.schema(metrics.schema).parquet(os.path.join(out_dir, "metrics")),
-        lineage=spark.read.schema(lineage.schema).parquet(os.path.join(out_dir, "lineage")),
+        metrics=spark.read.schema(written[0].schema).parquet(writes[0][1]),
+        lineage=spark.read.schema(written[1].schema).parquet(writes[1][1]),
+        total=counts["total"],
+        kept=counts["kept"],
+        rules=[r.asDict(recursive=True) for r in metrics_obs.get["rows"]],
         observed=observed,
     )
 

@@ -38,14 +38,17 @@ def _update(
     if len(pdf):
         import numpy as np
 
+        # a NaT would cast to INT64_MIN below and silently corrupt the
+        # session counts; fail loudly, naming the user
+        if pdf["ts"].isna().any():
+            raise ValueError(f"user {key[0]}: event with a null ts")
         pdf = pdf.sort_values(["ts", "event_id"])
-        # whole-second truncation matches the batch q05 semantics
-        # (unix_timestamp/epoch both truncate). Vectorized: the previous
-        # per-event Python loop paid a Timestamp.timestamp() call per
-        # row (~1M rows per run at bench scale); int64-ns floor-division
-        # is the same whole-second value, and the gap test over adjacent
-        # pairs + the carry-in comparison against the state's last_ts is
-        # exactly the loop's session-increment count.
+        # whole seconds, floored: pre-epoch times round down like Spark's
+        # unix_timestamp, which the batch q05 semantics use. Vectorized:
+        # the previous per-event Python loop paid a Timestamp.timestamp()
+        # call per row (~1M rows per run at bench scale); the gap test
+        # over adjacent pairs + the carry-in comparison against the
+        # state's last_ts is exactly the loop's session-increment count.
         t = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
         n_sessions += int((np.diff(t) > GAP_SEC).sum())
         if last_ts is None or t[0] - last_ts > GAP_SEC:

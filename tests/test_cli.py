@@ -3,6 +3,7 @@ multi-valued --input, --threshold overrides, --rules subset,
 --pitfalls-output, --analysis-output. Drives main.main() in-process
 against synthetic pages parquet."""
 
+import glob
 import json
 import os
 import tempfile
@@ -37,10 +38,17 @@ def pages_parquet(spark):
     return synth.spark_pages_parquet(spark, 300, seed=11)
 
 
-def _run(pages_parquet, *extra):
+@pytest.fixture(scope="module")
+def empty_parquet(spark, pages_parquet):
+    empty = tempfile.mkdtemp(prefix="cli_empty_")
+    spark.read.parquet(pages_parquet).limit(0).write.mode("overwrite").parquet(empty)
+    return empty
+
+
+def _run(pages_parquet, *extra, cpus="8"):
     out = tempfile.mkdtemp(prefix="cli_out_")
     cli_main.main([
-        "--input", pages_parquet, "--output", out, "--cpus", "8", *extra,
+        "--input", pages_parquet, "--output", out, "--cpus", cpus, *extra,
     ])
     return out
 
@@ -97,20 +105,54 @@ def test_cli_summary_counts_match_sink(spark, pages_parquet, th_restore,
 
 
 @pytest.mark.parametrize("extra", [(), ("--resume",)], ids=["plain", "resume"])
-def test_cli_summary_counts_on_empty_input(spark, pages_parquet, th_restore,
+def test_cli_summary_counts_on_empty_input(spark, empty_parquet, th_restore,
                                            monkeypatch, extra):
     """An empty input reports 0 docs and 0 kept, not a null sum of the
     empty lineage table, on both paths: the resumed sink is read back with
     the verdict schema, as an empty sink has no data file to infer one
     from."""
-    empty = tempfile.mkdtemp(prefix="cli_empty_")
-    spark.read.parquet(pages_parquet).limit(0).write.mode("overwrite").parquet(empty)
-    out, res = _run_capturing(monkeypatch, empty, *extra)
+    out, res = _run_capturing(monkeypatch, empty_parquet, *extra)
     summary = json.load(open(os.path.join(out, "analysis_results.json")))
     assert (summary["total_docs"], summary["kept"], summary["dropped"]) == (0, 0, 0)
     assert _lineage_sums(spark, out) == (0, 0)
     if not extra:
         assert res.observed == {"n_docs": 0, "n_keep": 0, "n_model_errors": 0}
+
+
+@pytest.mark.parametrize("source", ["pages", "empty"])
+@pytest.mark.parametrize("extra", [(), ("--resume",)], ids=["plain", "resume"])
+def test_cli_summary_rules_match_written_metrics(spark, request, th_restore,
+                                                 extra, source):
+    """The summary's per-rule rows, observed on the metrics write, are
+    the written metrics table's rows, on both paths and on empty input."""
+    out = _run(request.getfixturevalue(f"{source}_parquet"), *extra)
+    summary = json.load(open(os.path.join(out, "analysis_results.json")))
+    written = sorted(
+        (r.asDict(recursive=True)
+         for r in spark.read.parquet(os.path.join(out, "metrics")).collect()),
+        key=lambda r: r["rule"],
+    )
+    assert len(written) == len(TH.RULES)
+    assert summary["rules"] == json.loads(json.dumps(written, default=str))
+
+
+@pytest.mark.parametrize("extra", [(), ("--resume",)], ids=["plain", "resume"])
+def test_cli_writes_one_file_per_bucket(spark, pages_parquet, th_restore, extra):
+    """With 8 shuffle partitions for 32 buckets, every bucket directory
+    of the sink still holds exactly one file: the bucket exchange keeps a
+    bucket in one write task, instead of one file per task per bucket."""
+    saved = {k: spark.conf.get(k) for k in (
+        "spark.sql.shuffle.partitions", "spark.sql.files.minPartitionNum")}
+    try:
+        out = _run(pages_parquet, *extra, cpus="4")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    dirs = glob.glob(os.path.join(out, "pages_out", "bucket=*"))
+    assert len(dirs) == TH.N_BUCKETS
+    files = {d: glob.glob(os.path.join(d, "*.parquet")) for d in dirs}
+    assert all(len(f) == 1 for f in files.values()), files
 
 
 def test_cli_plain_and_resume_write_the_same_tables(spark, pages_parquet, th_restore):
@@ -234,7 +276,8 @@ def test_cli_skip_extract_flag(spark, pages_parquet, th_restore):
     from rsmetacheck_spark.operators.report import summary_report
 
     base = json.loads(summary_report(
-        res.metrics, res.pages_out.count(),
+        [r.asDict(recursive=True) for r in res.metrics.collect()],
+        res.pages_out.count(),
         res.pages_out.filter("keep").count(),
     ))
     assert summary == base

@@ -10,7 +10,7 @@ import pytest
 from rsmetacheck_spark import synth
 from rsmetacheck_spark import thresholds as TH
 from rsmetacheck_spark.oracle import oracle_labels
-from rsmetacheck_spark.plans.pipeline import materialize
+from rsmetacheck_spark.plans.pipeline import materialize, verdict_plan
 
 N_DOCS = 400
 
@@ -90,3 +90,36 @@ def test_lineage_sums(results):
             total_hits[r] += v
     for rule, _sev in TH.RULES:
         assert total_hits[rule] == int(want[f"hit_{rule}"].sum()), rule
+
+
+# accents, CJK, emoji and a combining mark before, around and inside the
+# boilerplate phrases; hits and near misses
+MULTIBYTE_TEXTS = (
+    "Café crème brûlée, lorem ipsum dolor sit amet",
+    "日本語の文章です。enable javascript 中文字符",
+    "🎉🎊 click here to continue 🎉",
+    "👍🏽lorem ipsum👍🏽",
+    "ÉTÉ — ALL RIGHTS RESERVED WORLDWIDE — ÉTÉ",
+    "e\u0301 terms of service apply",
+    "ｌｏｒｅｍ ｉｐｓｕｍ 全角",
+    "lorem ipsüm, naïve façade 😀",
+    "terms of service appl\u00e9 ça",
+    "中文 enable javascrípt",
+)
+
+
+def test_boilerplate_probe_on_multibyte_text(spark):
+    """R006 probes lowercased UTF-8 text byte by byte: multi-byte
+    characters next to a phrase must not change its answer."""
+    rule = "R006_boilerplate_phrase"
+    pages_pdf = pd.DataFrame({
+        "url": [f"https://ok.example/mb/{i}" for i in range(len(MULTIBYTE_TEXTS))],
+        "warc_ts": pd.Timestamp("2025-01-01"),
+        "html": [synth.render_html(t) for t in MULTIBYTE_TEXTS],
+    })
+    rows = verdict_plan(spark.createDataFrame(pages_pdf)).select(
+        "url", "findings").collect()
+    got = {r.url: next(f.hit for f in r.findings if f.rule == rule) for r in rows}
+    want = oracle_labels(pages_pdf).set_index("url")[f"hit_{rule}"].to_dict()
+    assert got == want
+    assert sum(got.values()) == 6

@@ -38,7 +38,8 @@ def test_reports(spark, tmp_path):
     assert n_flagged == len(reports) > 0
 
     kept = sum(1 for r in rows if r.keep)
-    summary = json.loads(summary_report(res.metrics, len(rows), kept))
+    summary = json.loads(summary_report(
+        [r.asDict(recursive=True) for r in res.metrics.collect()], len(rows), kept))
     assert summary["total_docs"] == 200 and summary["kept"] == kept
     by_rule = {r["rule"]: r for r in summary["rules"]}
     want_hits = sum(1 for r in rows for f in r.findings

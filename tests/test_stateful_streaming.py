@@ -7,10 +7,12 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from rsmetacheck_spark.queries import q05_sessionize
-from rsmetacheck_spark.streaming.stateful import sessionize_stateful
+from rsmetacheck_spark.streaming.stateful import _update, sessionize_stateful
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,3 +69,26 @@ def test_stateful_matches_batch(spark, tmp_path):
         for r in q05_sessionize(spark, SF_DIR).collect()
     }
     assert got == want and len(want) >= 10
+
+
+class _NewState:
+    """A GroupState stand-in for a user seen for the first time."""
+
+    exists = False
+
+    def update(self, value):
+        self.value = value
+
+
+def test_update_rejects_null_ts():
+    """A NaT ts would cast to INT64_MIN and count as a session of its own;
+    the update raises instead, naming the user."""
+    events = pd.DataFrame({
+        "user_id": [7, 7],
+        "ts": pd.to_datetime(["2025-01-01 00:00:00", None]),
+        "event_id": [1, 2],
+    })
+    state = _NewState()
+    with pytest.raises(ValueError, match="user 7"):
+        list(_update((7,), iter([events]), state))
+    assert not hasattr(state, "value")
