@@ -48,12 +48,8 @@ def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
     list and no second scan for the document total."""
     # A3 fidelity (detect_pitfalls_main.py:346-351): a hit counts once per
     # TARGET LANGUAGE of the document (multi-valued explode over the
-    # langid top-2 list when present), while `hits` stays doc-level —
-    # exactly the reference's two counters
-    langs = (
-        F.col("lang_top2") if "lang_top2" in pages_out.columns
-        else F.array("lang_pred")
-    )
+    # langid top-2 list), while `hits` stays doc-level — exactly the
+    # reference's two counters
     # the findings plus a NULL entry standing for the document (explode,
     # not filter/transform lambdas, which are interpreted: 0.34 s against
     # 0.22 s per 100k docs on 4 cores); explode_outer makes a NULL
@@ -66,7 +62,7 @@ def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
     counts = (
         pages_out
         .select(
-            langs.alias("langs"),
+            F.col("lang_top2").alias("langs"),
             F.explode_outer(F.concat("findings", F.array(doc))).alias("f"),
         )
         .filter(F.col("f").isNull() | F.col("f.hit"))
@@ -153,12 +149,9 @@ def host_metrics_table(pages_out: DataFrame) -> DataFrame:
 def lineage_table(pages_out: DataFrame, input_snapshot: str) -> DataFrame:
     """Per-partition lineage; partition = the deterministic url-hash bucket
     (the checkpoint/resume unit), not the ephemeral task partition id."""
-    part = (
-        F.col("bucket") if "bucket" in pages_out.columns else F.spark_partition_id()
-    )
     return (
         pages_out
-        .groupBy(part.alias("partition_id"))
+        .groupBy(F.col("bucket").alias("partition_id"))
         .agg(
             F.count("*").alias("rows_in"),
             F.sum(F.col("keep").cast("long")).alias("rows_kept"),

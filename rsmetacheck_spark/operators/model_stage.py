@@ -11,8 +11,10 @@ interpreted-HOF Column trees). Models are lazy per-executor singletons
 mirrors detect_pitfalls_main.py:356-358: a failing row yields null scores +
 an `model_error` string instead of killing the task.
 
-Scale: embarrassingly parallel, zero shuffle; partition sizing is whatever
-the scan gives (size-bounded by spark.sql.files.maxPartitionBytes).
+Scale: embarrassingly parallel, zero shuffle; it runs at whatever
+partitioning its input has (for a file scan, size-bounded by
+spark.sql.files.maxPartitionBytes) — plans/pipeline.py never repartitions
+the input in front of it.
 """
 
 from __future__ import annotations

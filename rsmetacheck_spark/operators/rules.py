@@ -2,10 +2,12 @@
 
 Split of labor (SURVEY.md §2.9): token-level stats arrive from the fused
 Arrow stage (functions/pytext.py explains why); everything HERE is a native
-Column expression — threshold compares, substring probes, URL/host and
-timestamp rules — all inside whole-stage codegen. Each rule returns
-(metric, hit); registry order mirrors the reference's fixed detector list
-(detect_pitfalls_main.py:281-311) since rule order is part of output parity.
+SQL expression — threshold compares, substring probes, URL/host and
+timestamp rules — all inside whole-stage codegen. Each rule is
+(metric, hit) SQL text (sqltext.py: one parse per column, every threshold
+a literal that reads back exactly); registry order mirrors the reference's
+fixed detector list (detect_pitfalls_main.py:281-311) since rule order is
+part of output parity.
 
 Reference shapes implemented (SURVEY.md §2.3):
  - doc length      <- P010's line-count check (p010.py:73)
@@ -19,81 +21,62 @@ Reference shapes implemented (SURVEY.md §2.3):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from .. import thresholds as TH
+from .sqltext import number, quote
 
 
-def url_host(url: Column) -> Column:
-    return F.regexp_extract(url, r"^https?://([^/]+)", 1)
+def _in(col: str, values) -> str:
+    # an empty IN list is a syntax error in SQL text; no value is in it
+    return f"{col} IN ({', '.join(map(quote, values))})" if values else "false"
 
 
-def boilerplate_hit(text: Column, lowered: bool = False) -> Column:
-    """`lowered=True` means `text` is ALREADY lowercased (a named
-    column): without it, Catalyst inlines `lower(text)` into every
-    phrase's probe, lowercasing the full text |PHRASES| times per row —
-    measured seconds per million docs in the verdict stage.
+def rule_metrics() -> dict[str, tuple[str, str]]:
+    """rule_code -> (metric_sql, hit_sql), SQL text over the model-stage
+    columns (url, warc_ts, lang_pred, log_ppl, n_pii_*, the pytext stats)
+    plus `__lowtext`, the lowercased extracted text that verdicts.py
+    names once per row.
 
-    `contains` is a byte search, where `instr` steps through characters
-    to return a position; a valid UTF-8 phrase can only match valid UTF-8
-    text at a character boundary, so both give the same answer (16,000
-    docs on 4 cores: the probes took 0.216 s with instr, 0.036 s this
-    way, with identical hits)."""
-    low = text if lowered else F.lower(text)
-    hit = F.lit(False)
-    for p in TH.BOILERPLATE_PHRASES:
-        hit = hit | low.contains(p)
-    return hit
+    Boilerplate probes `contains` the lowered text: a byte search, where
+    `instr` steps through characters to return a position; a valid UTF-8
+    phrase can only match valid UTF-8 text at a character boundary, so
+    both give the same answer (16,000 docs on 4 cores: the probes took
+    0.216 s with instr, 0.036 s this way, with identical hits)."""
+    boiler = " OR ".join(
+        f"contains(__lowtext, {quote(p)})" for p in TH.BOILERPLATE_PHRASES
+    ) or "false"
+    host = f"regexp_extract(url, {quote(r'^https?://([^/]+)')}, 1)"
 
+    def above(col: str, limit) -> tuple[str, str]:
+        return col, f"{col} > {number(limit)}"
 
-def rule_metrics(c: dict[str, Column]) -> dict[str, tuple[Column, Column]]:
-    """rule_code -> (metric, hit). `c` maps column name -> Column for:
-    url, warc_ts, extracted_text, lang_pred, log_ppl, n_pii_*, and the
-    pytext stats (n_words, sym_ratio, stop_frac, mean_word_len,
-    dup_ngram_frac, bullet_frac, ellipsis_frac).
-    """
-    nw = c["n_words"]
-    # prefer a caller-materialized lowered-text column (verdicts.py names
-    # one) so the lowercase pass runs once per row, not once per phrase
-    if "__lowtext" in c:
-        boiler = boilerplate_hit(c["__lowtext"], lowered=True)
-    else:
-        boiler = boilerplate_hit(c["extracted_text"])
     return {
         "R001_doc_length": (
-            nw.cast("double"), (nw < TH.MIN_WORDS) | (nw > TH.MAX_WORDS)
+            "CAST(n_words AS DOUBLE)",
+            f"n_words < {number(TH.MIN_WORDS)} OR n_words > {number(TH.MAX_WORDS)}",
         ),
-        "R002_symbol_ratio": (c["sym_ratio"], c["sym_ratio"] > TH.MAX_SYMBOL_RATIO),
+        "R002_symbol_ratio": above("sym_ratio", TH.MAX_SYMBOL_RATIO),
         "R003_stopword_fraction": (
-            c["stop_frac"], c["stop_frac"] < TH.MIN_STOPWORD_FRAC
+            "stop_frac", f"stop_frac < {number(TH.MIN_STOPWORD_FRAC)}"
         ),
         "R004_mean_word_length": (
-            c["mean_word_len"],
-            (c["mean_word_len"] < TH.MIN_MEAN_WORD_LEN)
-            | (c["mean_word_len"] > TH.MAX_MEAN_WORD_LEN),
+            "mean_word_len",
+            f"mean_word_len < {number(TH.MIN_MEAN_WORD_LEN)}"
+            f" OR mean_word_len > {number(TH.MAX_MEAN_WORD_LEN)}",
         ),
-        "R005_dup_ngram_fraction": (
-            c["dup_ngram_frac"], c["dup_ngram_frac"] > TH.MAX_DUP_NGRAM_FRAC
-        ),
+        "R005_dup_ngram_fraction": above("dup_ngram_frac", TH.MAX_DUP_NGRAM_FRAC),
         "R006_boilerplate_phrase": (
-            F.when(boiler, 1.0).otherwise(0.0), boiler
+            f"CASE WHEN {boiler} THEN 1.0D ELSE 0.0D END", boiler
         ),
-        "R007_bullet_ratio": (
-            c["bullet_frac"], c["bullet_frac"] > TH.MAX_BULLET_LINE_FRAC
-        ),
-        "R008_ellipsis_ratio": (
-            c["ellipsis_frac"], c["ellipsis_frac"] > TH.MAX_ELLIPSIS_LINE_FRAC
-        ),
-        "R009_langid": (F.lit(0.0), ~c["lang_pred"].isin(*TH.KEEP_LANGS)),
-        "R010_perplexity": (c["log_ppl"], c["log_ppl"] > TH.MAX_LOG_PPL),
-        "R011_pii_email": (c["n_pii_email"].cast("double"), c["n_pii_email"] > 0),
-        "R012_pii_phone": (c["n_pii_phone"].cast("double"), c["n_pii_phone"] > 0),
-        "R013_pii_id": (c["n_pii_id"].cast("double"), c["n_pii_id"] > 0),
-        "R014_host_blocklist": (
-            F.lit(0.0), url_host(c["url"]).isin(*TH.HOST_BLOCKLIST)
-        ),
+        "R007_bullet_ratio": above("bullet_frac", TH.MAX_BULLET_LINE_FRAC),
+        "R008_ellipsis_ratio": above("ellipsis_frac", TH.MAX_ELLIPSIS_LINE_FRAC),
+        "R009_langid": ("0.0D", f"NOT ({_in('lang_pred', TH.KEEP_LANGS)})"),
+        "R010_perplexity": above("log_ppl", TH.MAX_LOG_PPL),
+        "R011_pii_email": ("CAST(n_pii_email AS DOUBLE)", "n_pii_email > 0"),
+        "R012_pii_phone": ("CAST(n_pii_phone AS DOUBLE)", "n_pii_phone > 0"),
+        "R013_pii_id": ("CAST(n_pii_id AS DOUBLE)", "n_pii_id > 0"),
+        "R014_host_blocklist": ("0.0D", _in(host, TH.HOST_BLOCKLIST)),
         "R015_freshness": (
-            F.lit(0.0), c["warc_ts"] < F.lit(TH.FRESHNESS_CUTOFF).cast("timestamp")
+            "0.0D",
+            f"warc_ts < CAST({quote(TH.FRESHNESS_CUTOFF)} AS TIMESTAMP)",
         ),
     }

@@ -4,7 +4,7 @@ detect_pitfalls_main.py:41-412, recast as one lazy DataFrame graph):
     pages(url, warc_ts, html[, text, lang])
       -> fused model stage (extract + langid + perplexity + scrub + token
          stats; ONE Arrow round trip, per-executor model singletons)
-      -> native-expr rules -> findings array + keep gate
+      -> rules as SQL text -> findings array + keep gate
       -> write_buckets: pages_out, partitioned by url-hash bucket
       -> finish: metrics / lineage [/ host_metrics / reports] FROM THE
          WRITTEN TABLE, all in one concurrent wave of jobs
@@ -24,8 +24,9 @@ the narrow columns (column pruning at the parquet scan) and never
 recomputes models. The bucket column doubles as the checkpoint/resume unit.
 
 Scale notes (the 100 TB story):
- - model stage: embarrassingly parallel, zero shuffle; partition sizing is
-   bounded by spark.sql.files.maxPartitionBytes at the scan.
+ - model stage: embarrassingly parallel, zero shuffle; it runs at the
+   scan's partitioning (bounded by spark.sql.files.maxPartitionBytes), and
+   nothing repartitions the input.
  - only shuffle in the whole plan: the partitionBy write (hash-bucketed,
    uniform by construction — url hash, no hot keys) and the tiny
    (rule, lang) metric aggregation of pre-combined partial counts.
@@ -91,107 +92,20 @@ def verdict_plan(pages: DataFrame, text_input: bool = False) -> DataFrame:
     step is skipped, everything downstream (langid, perplexity, scrub,
     stats, rules, findings) runs identically."""
     # Early projection: ground-truth lang (or anything else) must not
-    # ride the repartition shuffle and the Arrow round trip.
+    # ride the Arrow round trip and the bucket exchange.
     pages = pages.select("url", "warc_ts", "text" if text_input else "html")
     scored = apply_model_stage(pages, text_input=text_input)
     out = with_findings(scored)
     return out.withColumn("bucket", bucket_of()).select(*OUTPUT_COLS)
 
 
-def encode_for_sink(df: DataFrame) -> DataFrame:
-    """Sparse-encode the sink rows: extracted_text is NULLed where it
-    equals scrubbed_text (~94% of rows — only PII hits differ), which
-    halves the text bytes written/read. Loss-free: decode_from_sink
-    restores the column exactly. The model stage already emits the column
-    sparsely (the nullif here is then a no-op safety net for inputs that
-    arrive dense); memory/IO bytes per doc are the measured multi-core
-    throughput limiter, so sparse text rides the Arrow boundary, the
-    bucket exchange, AND the sink."""
-    return df.withColumn(
-        "extracted_text", F.expr("nullif(extracted_text, scrubbed_text)")
-    )
-
-
 def decode_from_sink(df: DataFrame) -> DataFrame:
+    """Restore extracted_text, which the model stage emits sparsely (NULL
+    where it equals scrubbed_text, ~94% of rows): the Arrow boundary, the
+    bucket exchange and the sink carry half the text bytes."""
     return df.withColumn(
         "extracted_text", F.coalesce("extracted_text", "scrubbed_text")
     )
-
-
-def _scan_partitions_estimate(spark: SparkSession, pages: DataFrame) -> int | None:
-    """Estimate the scan's partition count from PUBLIC APIs only.
-
-    File-backed input: replicate FilePartition packing from inputFiles() +
-    local file sizes (split size maxPartitionBytes, small files padded by
-    openCostInBytes). Non-file input (createDataFrame test paths): the
-    public `.rdd.getNumPartitions()` — driver-side plan conversion only,
-    acceptable off the 100 TB path. Returns None when sizes are
-    unstatable (object store): there the scan's own maxPartitionBytes
-    packing is already the right parallelism and no rebalance is wanted.
-    """
-    # The file-packing estimate below is only valid for a BARE scan
-    # (optionally filtered/projected). If the caller already reshaped the
-    # partitioning — an explicit repartition (tools/profile_isoload.py
-    # repartitions to cpus before materialize) or a multi-path union —
-    # the estimate would ignore it and trigger a redundant full
-    # repartition of the raw input. Detect via the physical plan string
-    # (public explain() output; no _jdf) and defer to the caller.
-    import contextlib
-    import io
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pages.explain(mode="simple")
-    plan_str = buf.getvalue()
-    # Operator names only — anchored at the start of a tree line (after
-    # the +-/:/* drawing chars). A bare substring test would false-match
-    # inside the FileScan Location (an input path like
-    # /data/ExchangeRates/...) and silently disable the rebalance.
-    def _has_op(*ops: str) -> bool:
-        pat = r"(?m)^[\s:+*-]*(?:\(\d+\)\s*)?(?:" + "|".join(ops) + r")\b"
-        return re.search(pat, plan_str) is not None
-
-    if _has_op("Exchange", "Coalesce"):
-        return None
-
-    files = pages.inputFiles()
-    if not files or _has_op("Union"):
-        # Non-file input, or a multi-path union (CLI --input a --input b):
-        # per-scan packing makes the greedy estimate under-count, but the
-        # exact count is available driver-side (plan conversion, no job).
-        return pages.rdd.getNumPartitions()
-
-    def _bytes(conf_key: str, default: int) -> int:
-        # conf accepts "134217728b", "64m", "128MB", ... — normalize
-        raw = str(spark.conf.get(conf_key, str(default))).strip().lower()
-        units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-        num = raw.rstrip("kmgtb")
-        suffix = raw[len(num):].rstrip("b") or "b"
-        return int(float(num or default) * units.get(suffix, 1))
-
-    try:
-        mpb = _bytes("spark.sql.files.maxPartitionBytes", 134217728)
-        open_cost = _bytes("spark.sql.files.openCostInBytes", 4194304)
-        total = sum(
-            os.path.getsize(f.removeprefix("file:")) + open_cost for f in files
-        )
-    except (OSError, ValueError):
-        return None
-    # Spark's FilePartition sizing SHRINKS the split size for small
-    # inputs: maxSplitBytes = min(maxPartitionBytes, max(openCost,
-    # totalBytes / minPartitionNum)) with minPartitionNum defaulting to
-    # the default parallelism — omitting this over-estimates split size,
-    # under-counts partitions, and triggers a spurious full repartition
-    # of the raw input before the model stage.
-    min_parts = int(
-        spark.conf.get(
-            "spark.sql.files.minPartitionNum",
-            str(spark.sparkContext.defaultParallelism),
-        )
-    )
-    max_split = min(mpb, max(open_cost, total // max(min_parts, 1)))
-    return max(1, -(-total // max_split))
 
 
 def write_buckets(
@@ -215,7 +129,7 @@ def write_buckets(
     # cost (4,000 docs on 4 cores: the 32 bucket files took 0.44 s from 32
     # tasks, 0.25 s from 8). The model stage still parallelizes at the scan
     # partitioning, upstream of this exchange.
-    rows = encode_for_sink(plan).repartition("bucket")
+    rows = plan.repartition("bucket")
     # Global counters ride the WRITE action itself (AggregatingAccumulator
     # under CollectMetrics): at 100 TB this is n_docs/n_keep/n_errors for
     # free — no separate count job, no second scan of the sink. The
@@ -333,23 +247,9 @@ def materialize(
     text_input: bool = False,
     reports_dir: str | None = None,
 ) -> PipelineResult:
-    """Write every bucket of pages_out in one job, then `finish`."""
-    # Size-bound parallelism: at 100 TB the scan naturally yields
-    # maxPartitionBytes-bounded partitions; a small test/bench input can
-    # arrive as 1-2 partitions, which would serialize the Python model
-    # stage. Rebalance only when the scan under-partitions.
-    # Optimal fan-out for the Arrow stage is ~1x cores: each mapInPandas
-    # task pays a fixed Python-worker round-trip cost (~0.1-0.4 s measured),
-    # so 2x+ over-partitioning *lowers* throughput at bench scale.
-    target = spark.sparkContext.defaultParallelism
-    n_parts = _scan_partitions_estimate(spark, pages)
-    # band, not equality: n_parts is an ESTIMATE of the scan's packing
-    # (greedy file packing can land ±1-few off the ceil estimate) —
-    # rebalance only when CLEARLY under-partitioned (the serialized-
-    # Python-stage disaster case is 1-4 partitions, not target-1) or
-    # heavily over-partitioned (per-task Arrow round-trip cost)
-    if n_parts is not None and (2 * n_parts < target or n_parts > 2 * target):
-        pages = pages.repartition(target)
+    """Write every bucket of pages_out in one job, then `finish`. The
+    model stage runs at the scan's partitioning; a caller that wants
+    another repartitions `pages` first (tools/profile_isoload.py does)."""
     plan = verdict_plan(pages, text_input=text_input)
     observed = write_buckets(plan, os.path.join(out_dir, "pages_out"))
     return finish(spark, out_dir, plan.schema, input_snapshot, observed, reports_dir)

@@ -35,9 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def phase_run(cpus: int, n_docs: int, arrow_batch: int) -> dict:
     from rsmetacheck_spark import synth
-    from rsmetacheck_spark.plans.pipeline import (
-        encode_for_sink, materialize, verdict_plan,
-    )
+    from rsmetacheck_spark.plans.pipeline import materialize, verdict_plan
     from rsmetacheck_spark.session import get_spark
 
     spark = get_spark(f"iso{cpus}", cores=cpus, shuffle_partitions=max(cpus, 8))
@@ -54,7 +52,7 @@ def phase_run(cpus: int, n_docs: int, arrow_batch: int) -> dict:
     out = {}
     for _rep in range(2):
         t0 = time.time()
-        encode_for_sink(verdict_plan(pages)).write.format("noop").mode(
+        verdict_plan(pages).write.format("noop").mode(
             "overwrite"
         ).save()
         out["scan_model"] = min(

@@ -28,9 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def phase_run(cpus: int, n_docs: int) -> dict:
     from rsmetacheck_spark import synth
-    from rsmetacheck_spark.plans.pipeline import (
-        encode_for_sink, materialize, verdict_plan,
-    )
+    from rsmetacheck_spark.plans.pipeline import materialize, verdict_plan
     from rsmetacheck_spark.session import get_spark
 
     spark = get_spark(f"prof{cpus}", cores=cpus, shuffle_partitions=max(cpus, 8))
@@ -45,7 +43,7 @@ def phase_run(cpus: int, n_docs: int) -> dict:
     shutil.rmtree(out_dir, ignore_errors=True)
 
     t0 = time.time()
-    encode_for_sink(verdict_plan(pages)).write.format("noop").mode(
+    verdict_plan(pages).write.format("noop").mode(
         "overwrite"
     ).save()
     out["scan_model"] = round(time.time() - t0, 2)
