@@ -18,17 +18,19 @@ COMPILED = tuple(
 )
 
 # prescreen: every STOCK PII pattern needs '@' or a 3-digit run somewhere;
-# most documents have neither, so one cheap search skips the three subn
-# passes. The shortcut is sound only for the default patterns — a runtime
-# override (--threshold PII_PATTERNS=...) disables it.
-_PRESCREEN = re.compile(r"[@]|\d\d\d")
+# most documents have neither, so two cheap scans skip the three subn
+# passes. `"@" in text` is a C substring scan, about twice as fast as one
+# regex alternation over both; `\d` keeps its Unicode-digit meaning. The
+# shortcut is sound only for the default patterns — a runtime override
+# (--threshold PII_PATTERNS=...) disables it.
+_D3 = re.compile(r"\d\d\d")
 _PRESCREEN_OK = "PII_PATTERNS" not in TH.OVERRIDDEN
 
 _ZERO = {name: 0 for name, _p, _r in TH.PII_PATTERNS}
 
 
 def scrub_text(text: str) -> tuple[str, dict[str, int]]:
-    if _PRESCREEN_OK and not _PRESCREEN.search(text):
+    if _PRESCREEN_OK and not ("@" in text or _D3.search(text)):
         return text, dict(_ZERO)
     counts: dict[str, int] = {}
     for name, rx, repl in COMPILED:

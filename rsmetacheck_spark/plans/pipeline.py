@@ -43,7 +43,7 @@ import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -51,6 +51,7 @@ from .. import thresholds as TH
 from ..operators.metrics import host_metrics_table, lineage_table, rule_metrics_table
 from ..operators.model_stage import apply_model_stage
 from ..operators.report import per_doc_reports
+from ..operators.sqltext import ident, number
 from ..operators.verdicts import with_findings
 from ..sources.tables import write_table
 
@@ -77,11 +78,11 @@ class PipelineResult:
     observed: dict | None = None
 
 
-def bucket_of() -> Column:
-    """The url-hash bucket: the sink's partition column and the unit a
-    resumed run checkpoints. A pure function of the url, so a resumed run
-    can filter on it before the model stage."""
-    return F.pmod(F.xxhash64("url"), F.lit(TH.N_BUCKETS)).cast("int")
+def bucket_sql() -> str:
+    """The url-hash bucket, as SQL text: the sink's partition column and
+    the unit a resumed run checkpoints. A pure function of the url, so a
+    resumed run can filter on it before the model stage."""
+    return f"CAST(pmod(xxhash64(url), {number(TH.N_BUCKETS)}) AS INT)"
 
 
 def verdict_plan(pages: DataFrame, text_input: bool = False) -> DataFrame:
@@ -96,7 +97,9 @@ def verdict_plan(pages: DataFrame, text_input: bool = False) -> DataFrame:
     pages = pages.select("url", "warc_ts", "text" if text_input else "html")
     scored = apply_model_stage(pages, text_input=text_input)
     out = with_findings(scored)
-    return out.withColumn("bucket", bucket_of()).select(*OUTPUT_COLS)
+    return out.selectExpr(*(
+        f"{bucket_sql()} AS bucket" if c == "bucket" else ident(c) for c in OUTPUT_COLS
+    ))
 
 
 def decode_from_sink(df: DataFrame) -> DataFrame:

@@ -73,8 +73,9 @@ def get_spark(
         # dominant non-scaling cost when every core is busy (the cluster
         # regime) — 4->16-core iso-load efficiency 0.55 full / 0.76
         # scan+model; at 50k it's 0.78 / 0.88. Unloaded runs are
-        # insensitive (<5%). ~2 KB rows -> ~100 MB Arrow buffers per
-        # task at 50k; drop this if executor memory is under ~2 GB/core.
+        # insensitive (<5%). ~3 KB rows (synthetic pages average 2.8 KB
+        # of html) -> ~150 MB Arrow buffers per task at 50k; drop this if
+        # executor memory is under ~2 GB/core.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         .config("spark.sql.files.maxPartitionBytes", "64m")
         # Parallelism FLOOR on file scans, derived from the core count

@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import thresholds as TH
-from ..plans.pipeline import bucket_of, verdict_plan, write_buckets
+from ..plans.pipeline import bucket_sql, verdict_plan, write_buckets
 
 _CKPT = "_checkpoint.json"
 
@@ -74,7 +74,7 @@ def resume_materialize(
         if fail_after_groups is not None and gi >= fail_after_groups:
             raise RuntimeError(f"injected failure before group {gi}")
         # bucket is a pure function of url: filter before the expensive stage
-        part = pages.filter(bucket_of().isin(group))
+        part = pages.filter(f"{bucket_sql()} IN ({', '.join(map(str, group))})")
         write_buckets(verdict_plan(part, text_input=text_input), pages_path, group)
         done.update(group)
         _mark_done(out_dir, done)

@@ -65,7 +65,7 @@ def test_per_rule_hit_parity(results):
 def test_lang_and_ppl_parity(results):
     got, want, _, _ = results
     assert (got["lang_pred"] == want["lang_pred"]).all()
-    assert (got["log_ppl"] - want["log_ppl"]).abs().max() < 1e-9
+    assert (got["log_ppl"] == want["log_ppl"]).all()
 
 
 def test_metrics_table(results, spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 import re
+import threading
 
 import pandas as pd
 import pytest
@@ -34,15 +35,19 @@ def test_verdict_plan_build_round_trips(spark, tmp_path, monkeypatch):
     client = spark.sparkContext._gateway._gateway_client
     calls = []
     send = client.send_command
+    builder = threading.current_thread()
 
     def counting(*args, **kwargs):
-        calls.append(1)
+        # py4j's finalizer thread sends deletes of earlier, unrelated
+        # objects whenever Python collects them: not this build's cost
+        if threading.current_thread() is builder:
+            calls.append(1)
         return send(*args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
     verdict_plan(spark.read.parquet(path))
     monkeypatch.undo()
-    assert 0 < len(calls) < 300, len(calls)
+    assert 0 < len(calls) < 160, len(calls)
 
 
 @pytest.mark.parametrize("x", [
