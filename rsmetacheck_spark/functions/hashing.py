@@ -9,8 +9,7 @@ reaches output.
 
 Scale note: minhash signatures are fixed-width (NUM_HASHES integers) per
 doc — the LSH band shuffle moves (band_key, doc_id) pairs only, never
-document text. Consumers import these names at call time, so a tool may
-rebind them (tools/ab_dd02.py times other hash/band counts).
+document text.
 """
 
 from __future__ import annotations

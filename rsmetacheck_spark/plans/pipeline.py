@@ -252,7 +252,7 @@ def materialize(
 ) -> PipelineResult:
     """Write every bucket of pages_out in one job, then `finish`. The
     model stage runs at the scan's partitioning; a caller that wants
-    another repartitions `pages` first (tools/profile_isoload.py does)."""
+    another repartitions `pages` first (tools/scale.py profile does)."""
     plan = verdict_plan(pages, text_input=text_input)
     observed = write_buckets(plan, os.path.join(out_dir, "pages_out"))
     return finish(spark, out_dir, plan.schema, input_snapshot, observed, reports_dir)

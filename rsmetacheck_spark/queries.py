@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import thresholds as TH
+from .functions.hashing import BAND_CAP, NUM_BANDS, NUM_HASHES, ROWS_PER_BAND
 
 # Documents-table rule thresholds (word-soup docs are 10-99 tokens).
 DOC_MIN_TOKENS = 20
@@ -694,10 +695,7 @@ def _minhash_sql(key: str, key_type: str, unnest: bool) -> tuple[str, str]:
     shingle's md5->int hash, grouped by `key`. `unnest` says the batch
     holds (key, sh) shingle ARRAYS rather than one shingle per row. The
     md5->int expression is the oracle's own hv CTE (integer arithmetic,
-    bitwise-identical mins). NUM_HASHES is read per call so a tool that
-    rebinds it (tools/ab_dd02.py) builds matching signatures."""
-    from .functions.hashing import NUM_HASHES
-
+    bitwise-identical mins)."""
     src = f"(SELECT {key}, unnest(sh) AS sh FROM _b)" if unnest else "_b"
     # hex -> int via DuckDB's 0x string cast: measured 4.7x faster
     # than the strpos/list_sum emulation and value-identical
@@ -727,8 +725,6 @@ def _dd02_candidates(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame
     permutation mins run as 128 DuckDB MIN aggregates per Arrow batch
     (see the inline comment at the signature build) — a map-only stage,
     since each doc's shingles arrive as one row."""
-    from .functions.hashing import BAND_CAP, NUM_BANDS, NUM_HASHES, ROWS_PER_BAND
-
     mat = _shingle_mat(spark, sf)  # one checkpointed pass; 3 consumers below
     # Signature build runs per Arrow batch in DuckDB (guide §4.2, the
     # _tok_counts pattern): each doc's shingle array is one whole row,
@@ -822,8 +818,6 @@ def dd02_minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
 def _sql_dd02_ctes() -> str:
     """The dd02 pipeline as a reusable CTE chain ending in `pairs`."""
-    from .functions.hashing import BAND_CAP, NUM_BANDS, NUM_HASHES, ROWS_PER_BAND
-
     t = _TOKS_DUCK.format(c="text")
     return f"""sh AS (
   SELECT doc_id, {_SHINGLES_DUCK.format(t=t)} AS sh FROM documents
@@ -6732,8 +6726,6 @@ def dd16_source_overlap(spark: SparkSession, sf: str) -> DataFrame:
     equi-joins onto the pair rows (the non-equi pairing is inherited
     from the inverted index — never a BNLJ). Only the |sources|-sized
     tables ever sit on the reduce side."""
-    from .functions.hashing import NUM_HASHES
-
     ss, sizes, inter = _dd16_sets(spark, sf)
     # per-source mins computed as PARTIAL per-batch DuckDB aggregates
     # (the dd02 sig pattern; md5->int is the oracle's hv expression),
@@ -6767,8 +6759,6 @@ def dd16_source_overlap(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_dd16() -> str:
-    from .functions.hashing import NUM_HASHES
-
     t = _TOKS_DUCK.format(c="text")
     return f"""
 WITH tt AS (SELECT source, {t} AS t FROM documents),

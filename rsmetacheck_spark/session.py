@@ -68,7 +68,7 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Iso-load profiling (tools/profile_isoload.py, BENCH/BASELINE.md):
+        # Iso-load profiling (tools/scale.py profile, BENCH/BASELINE.md):
         # at the 10k default the per-batch Python round-trip is the
         # dominant non-scaling cost when every core is busy (the cluster
         # regime) — 4->16-core iso-load efficiency 0.55 full / 0.76

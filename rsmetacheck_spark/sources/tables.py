@@ -12,7 +12,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_table(
@@ -28,24 +28,6 @@ def write_table(
     with open(os.path.join(path, "_manifest.json"), "w") as fh:
         json.dump({"snapshot": snapshot, "partition_by": list(partition_by)}, fh)
     return snapshot
-
-
-def read_table_pruned(spark: SparkSession, path: str, **eq_filters) -> DataFrame:
-    """Read a table with equality filters that PRUNE at the source.
-
-    For hive-style partition columns (the write_table partition_by
-    layout) the predicate lands in the scan's `PartitionFilters`, so
-    non-matching directories are never listed or opened — at 100 TB a
-    `lang=en` read of a lang-partitioned corpus touches only that
-    partition's files. For data columns the same predicate reaches
-    `PushedFilters` (parquet row-group stats). Callers don't need to
-    know which kind a column is; Catalyst routes each predicate to the
-    right side. tests/test_partition_pruning.py asserts both routes on
-    the physical plan AND on the actual file list."""
-    df = spark.read.parquet(path)
-    for col, val in eq_filters.items():
-        df = df.filter(df[col] == val)
-    return df
 
 
 def write_bucketed(

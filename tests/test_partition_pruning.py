@@ -1,10 +1,12 @@
 """Partition-pruning contract for the table layer: a partitioned
-write_table read back through read_table_pruned must (1) put the
+write_table read back with an equality filter must (1) put the
 partition-column predicate in the scan's PartitionFilters, (2) list
 ONLY the matching partition's files, and (3) push data-column
 predicates to PushedFilters — the scan-side behaviors that make a
 lang=en read of a 100 TB lang-partitioned corpus touch 1/|langs| of
-the data instead of filtering after a full scan."""
+the data instead of filtering after a full scan. Catalyst routes each
+predicate to the right side; the caller need not know which kind of
+column it filters."""
 
 from __future__ import annotations
 
@@ -13,9 +15,7 @@ import tempfile
 
 import pytest
 
-from rsmetacheck_spark.sources.tables import (
-    read_manifest, read_table_pruned, write_table,
-)
+from rsmetacheck_spark.sources.tables import read_manifest, write_table
 
 
 @pytest.fixture(scope="module")
@@ -32,7 +32,7 @@ def _scan_plan(df) -> str:
 
 def test_partition_filter_reaches_the_scan(spark, curated):
     path, _, _ = curated
-    df = read_table_pruned(spark, path, lang="en")
+    df = spark.read.parquet(path).filter("lang = 'en'")
     plan = _scan_plan(df)
     assert "PartitionFilters" in plan, plan[:2000]
     # the predicate must be IN PartitionFilters (scan-time pruning),
@@ -53,7 +53,7 @@ def test_pruned_read_never_opens_other_partitions(spark, curated):
     with open(junk, "wb") as fh:
         fh.write(b"this is not a parquet file")
     try:
-        df = read_table_pruned(spark, path, lang="en")
+        df = spark.read.parquet(path).filter("lang = 'en'")
         assert df.count() == docs.filter("lang = 'en'").count()
         with pytest.raises(Exception):
             spark.read.parquet(path).count()  # unpruned scan opens the junk
@@ -63,7 +63,7 @@ def test_pruned_read_never_opens_other_partitions(spark, curated):
 
 def test_data_column_predicate_is_pushed(spark, curated):
     path, _, _ = curated
-    df = read_table_pruned(spark, path, source="src3")
+    df = spark.read.parquet(path).filter("source = 'src3'")
     plan = _scan_plan(df)
     assert "PushedFilters" in plan, plan[:2000]
     pushed = plan.split("PushedFilters: [")[1].split("]")[0]
@@ -91,7 +91,7 @@ def test_pipeline_bucket_sink_prunes(spark):
     )
     out = tf.mkdtemp(prefix="prune_pipe_")
     materialize(spark, pages, out)
-    one = read_table_pruned(spark, os.path.join(out, "pages_out"), bucket=3)
+    one = spark.read.parquet(os.path.join(out, "pages_out")).filter("bucket = 3")
     plan = _scan_plan(one)
     assert "PartitionFilters" in plan
     pf = plan.split("PartitionFilters: [")[1].split("]")[0]
