@@ -77,8 +77,9 @@ class Dia:
             return f"regexp_matches({s}, '{self._rx(pattern)}')"
         return f"({s} rlike '{self._rx(pattern)}')"
 
-    def rextract(self, s: str, pattern: str, group: int = 1) -> str:
-        return f"regexp_extract({s}, '{self._rx(pattern)}', {group})"
+    def rextract(self, s: str, pattern: str) -> str:
+        """First capture group of pattern in s."""
+        return f"regexp_extract({s}, '{self._rx(pattern)}', 1)"
 
     def rreplace(self, s: str, pattern: str, repl: str) -> str:
         # backreference syntax: Java $1 vs RE2 \1

@@ -24,10 +24,10 @@ inaccessible in every rule, mirroring the reference's error path.
 
 Unlike ev01-ev08 (one shared Dia template rendered for both engines), the
 Spark side here is an INDEPENDENT implementation in the DataFrame Column
-API — it wires functions/scalars.py's `extract_urls` / `url_is_valid`
-(P008's text-extraction path) — while the oracle is hand-written DuckDB
-SQL. Agreement between the two is therefore a genuine two-implementation
-check, not a template rendered twice.
+API — `extract_urls` / `url_is_valid` below (P008's text-extraction
+path) — while the oracle is hand-written DuckDB SQL. Agreement between
+the two is therefore a genuine two-implementation check, not a template
+rendered twice.
 
 At scale this family is still a zero-shuffle per-row array expression: a
 real deployment swaps `_status_col` for a join against a crawled
@@ -46,7 +46,31 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .evidence import SPARK, Dia, _q
-from .functions.scalars import extract_urls, url_is_valid
+
+
+def url_is_valid(u: Column) -> Column:
+    """urlparse-style scheme+netloc format check (p008.py:8-22,
+    p015.py:7-14): ANY scheme is accepted (ftp:// is format-valid in the
+    reference), the netloc must be non-empty."""
+    return u.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*://[^/\s]+")
+
+
+def extract_urls(text: Column) -> Column:
+    """URL extraction from free text (p008.py:58-81), reference-exact:
+    TWO separate findall passes (https?:// then www.) whose matches may
+    OVERLAP — 'https://www.X' yields BOTH 'https://www.X' and 'www.X',
+    the latter always format-invalid, so P008 always fires on such text.
+    A single alternation would miss the bare-www duplicate. Then strip
+    exactly ONE trailing [,;.!?)] character (re.sub with an anchored
+    single-char class replaces one match)."""
+    return F.transform(
+        F.concat(
+            F.regexp_extract_all(text, F.lit(r"(?i)(https?://[^\s<>\"']+)"), 1),
+            F.regexp_extract_all(text, F.lit(r"(?i)(www\.[^\s<>\"']+)"), 1),
+        ),
+        lambda u: F.regexp_replace(u, r"[,;.!?)]$", ""),
+    )
+
 
 # Status palette: spans every boundary the three rules disagree on.
 # 200/204: all ok.  301: all ok.  302: ok for P011+P015, NOT P008.

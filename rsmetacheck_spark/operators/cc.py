@@ -45,6 +45,8 @@ def largestar_components(
 
     pairs: DataFrame with columns (id_a, id_b), id_a < id_b per row.
     checkpoint: (df, tag) -> materialized df (scratch-parquet round barrier).
+        It must write `df` on every call, never serve a cached table: each
+        write also collects that edge set's convergence stats.
     stats_out: optional dict, receives {"rounds": n} for tests/benchmarks.
 
     Returns DataFrame[doc_id, group_rep] with group_rep = min reachable id,
@@ -59,10 +61,9 @@ def largestar_components(
         Spark job per round of a driver loop whose cost at bench scale
         is almost entirely per-job overhead. bit_xor(xxhash64):
         order-independent, overflow-free, exact over a DISTINCT edge set
-        (no duplicate self-cancellation). Only safe for tags the
-        checkpoint fn NEVER serves from a session cache (the per-round
-        tags): a cache hit would skip the write and leave obs.get
-        blocking forever."""
+        (no duplicate self-cancellation). A checkpoint fn that served a
+        cached table would skip the write and leave obs.get blocking
+        forever, hence the contract above."""
         obs = Observation(tag)
         out = checkpoint(
             e.observe(
@@ -74,15 +75,9 @@ def largestar_components(
         )
         return out, (obs.get["n"], obs.get["h"])
 
-    # cc_edges may be served from a keyed session cache by the caller's
-    # checkpoint fn, so its stats stay a separate (one-off) action
-    edges = checkpoint(
+    edges, prev = _observed_ckpt(
         pairs.selectExpr("id_b AS a", "id_a AS b").distinct(), "cc_edges"
     )
-    row = edges.agg(
-        F.count("*").alias("n"), F.bit_xor(F.xxhash64("a", "b")).alias("h")
-    ).first()
-    prev = (row.n, row.h)
     rounds = 0
     from pyspark.sql import Window
 

@@ -1,11 +1,10 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
 processed by Arrow-batched mapInPandas.
 
-The image/audio codecs are not in this container, so the DECODE step is
-stubbed (deterministic fake features behind `decode_stub`, and a
-NotImplementedError path for real codecs) — but everything Spark-side is
-real and tested: the schema contract, batch iteration, per-row error
-isolation (the reference's detector-loop semantics,
+The image/audio codecs are not available, so the DECODE step is stubbed
+(deterministic fake features behind `decode_stub`) — but everything
+Spark-side is real and tested: the schema contract, batch iteration,
+per-row error isolation (the reference's detector-loop semantics,
 detect_pitfalls_main.py:356-358), and the partition-parallel execution
 shape. Swapping `decode_stub` for PIL/librosa is a one-function change.
 """
@@ -27,18 +26,9 @@ FEATURE_COLS = (
     "frame_count int, feat_error string"
 )
 
-_REAL_CODECS = False  # flipped when PIL/librosa are present
-
 
 def decode_stub(payload: bytes, kind: str) -> dict:
-    """Deterministic fake decode: byte stats + a fake frame count.
-
-    A real deployment raises NotImplementedError here until the codec libs
-    ship; the Spark plumbing (schema, batching, error isolation) is
-    identical either way.
-    """
-    if _REAL_CODECS:  # pragma: no cover
-        raise NotImplementedError("real image/audio decode not available in sandbox")
+    """Deterministic fake decode: byte stats + a fake frame count."""
     if not isinstance(payload, (bytes, bytearray, memoryview)):
         raise ValueError("payload must be binary")
     b = bytes(payload)
@@ -90,35 +80,6 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=out_schema)
 
 
-def synth_media(spark, n: int = 200, seed: int = 5) -> DataFrame:
-    """Deterministic fake media table (payload = seeded pseudo-bytes)."""
-    from pyspark.sql import functions as F
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                rng = np.random.RandomState((seed * 99991 + int(i)) % (2**31 - 1))
-                kind = ("image", "audio", "video")[int(i) % 3]
-                size = int(rng.randint(64, 2048))
-                payload = rng.bytes(size)
-                rows.append(
-                    (int(i), kind, payload, int(rng.randint(8, 512)),
-                     int(rng.randint(8, 512)))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "width", "height"]
-            )
-
-    return (
-        spark.range(0, n, 1, 8)
-        .mapInPandas(gen, MEDIA_SCHEMA)
-        .withColumn("kind", F.col("kind"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Content-defined deterministic media derived from the documents table:
 # payload = md5-chain bytes keyed by (seed, media_id), so an ANSI-SQL oracle
@@ -129,20 +90,20 @@ def synth_media(spark, n: int = 200, seed: int = 5) -> DataFrame:
 MEDIA_SEED = 5
 
 
-def payload_hex_chain(media_id: int, seed: int = MEDIA_SEED) -> tuple[str, int]:
+def payload_hex_chain(media_id: int) -> tuple[str, int]:
     """(payload_hex, size): size = 64 + (md5-int % 1985); payload = the
-    first `size` bytes of concat(md5(f"{seed}:{id}:{block}") digests)."""
-    h = int(hashlib.md5(f"{seed}:{media_id}:sz".encode()).hexdigest()[:8], 16)
+    first `size` bytes of concat(md5(f"{MEDIA_SEED}:{id}:{block}") digests)."""
+    h = int(hashlib.md5(f"{MEDIA_SEED}:{media_id}:sz".encode()).hexdigest()[:8], 16)
     size = 64 + h % 1985
     n_blk = (size + 15) // 16
     hexfull = "".join(
-        hashlib.md5(f"{seed}:{media_id}:{b}".encode()).hexdigest()
+        hashlib.md5(f"{MEDIA_SEED}:{media_id}:{b}".encode()).hexdigest()
         for b in range(n_blk)
     )
     return hexfull[: 2 * size], size
 
 
-def synth_media_from_docs(docs: DataFrame, seed: int = MEDIA_SEED) -> DataFrame:
+def synth_media_from_docs(docs: DataFrame) -> DataFrame:
     """documents -> media rows (media_id = doc_id) with md5-chain payloads."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -150,10 +111,10 @@ def synth_media_from_docs(docs: DataFrame, seed: int = MEDIA_SEED) -> DataFrame:
             rows = []
             for i in pdf["doc_id"]:
                 mid = int(i)
-                phex, size = payload_hex_chain(mid, seed)
+                phex, size = payload_hex_chain(mid)
                 kind = ("image", "audio", "video")[mid % 3]
-                w = 8 + int(hashlib.md5(f"{seed}:{mid}:w".encode()).hexdigest()[:8], 16) % 504
-                h = 8 + int(hashlib.md5(f"{seed}:{mid}:h".encode()).hexdigest()[:8], 16) % 504
+                w = 8 + int(hashlib.md5(f"{MEDIA_SEED}:{mid}:w".encode()).hexdigest()[:8], 16) % 504
+                h = 8 + int(hashlib.md5(f"{MEDIA_SEED}:{mid}:h".encode()).hexdigest()[:8], 16) % 504
                 rows.append((mid, kind, bytes.fromhex(phex), w, h))
             yield pd.DataFrame(
                 rows, columns=["media_id", "kind", "payload", "width", "height"]
@@ -179,12 +140,10 @@ FRAME_SCHEMA = (
 )
 
 
-def sample_frames(
-    df: DataFrame, n_frames: int = N_FRAMES, frame_len: int = FRAME_LEN
-) -> DataFrame:
-    """media rows -> up to n_frames fixed-length windows per payload.
+def sample_frames(df: DataFrame) -> DataFrame:
+    """media rows -> up to N_FRAMES FRAME_LEN-byte windows per payload.
 
-    Offsets are integer-arithmetic (i * ((size - frame_len) // (n-1))) so
+    Offsets are integer-arithmetic (i * ((size - FRAME_LEN) // (N-1))) so
     an ANSI-SQL oracle reproduces them exactly; payloads at or under one
     frame yield a single whole-payload frame. Per-row error isolation:
     a bad payload emits one frame_idx=-1 row with frame_error set."""
@@ -200,13 +159,13 @@ def sample_frames(
                 try:
                     b = bytes(r["payload"])
                     size = len(b)
-                    if size <= frame_len:
+                    if size <= FRAME_LEN:
                         starts = [0]
                     else:
-                        step = (size - frame_len) // (n_frames - 1)
-                        starts = [i * step for i in range(n_frames)]
+                        step = (size - FRAME_LEN) // (N_FRAMES - 1)
+                        starts = [i * step for i in range(N_FRAMES)]
                     for idx, st in enumerate(starts):
-                        w = b[st:st + frame_len]
+                        w = b[st:st + FRAME_LEN]
                         rows.append((
                             int(r["media_id"]), idx, st, len(w), sum(w),
                             hashlib.md5(w.hex().encode()).hexdigest(), None,
@@ -245,9 +204,7 @@ PATCH_SCHEMA = (
 )
 
 
-def patch_grid(
-    df: DataFrame, patch: int = PATCH, row_w: int = PATCH_ROW_W
-) -> DataFrame:
+def patch_grid(df: DataFrame) -> DataFrame:
     """media rows -> one row per PATCH×PATCH tile of the byte matrix.
 
     Tile (gx, gy) gathers bytes [(gy*P+ry)*row_w + gx*P, +P) for
@@ -257,6 +214,7 @@ def patch_grid(
     than one full tile row-band emit nothing; a bad payload emits one
     gx=-1 row with patch_error set (reference-style isolation,
     detect_pitfalls_main.py:356-358)."""
+    patch, row_w = PATCH, PATCH_ROW_W
     nx = row_w // patch
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -300,11 +258,12 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_media(df: DataFrame, stride: int = RESIZE_STRIDE) -> DataFrame:
+def resize_media(df: DataFrame) -> DataFrame:
     """media rows -> decimated payload features: every stride-th byte
     (positions 0, stride, 2*stride, ...), dims divided by stride (floor,
-    min 1). The checksum is over the decimated bytes' hex text so an
-    ANSI-SQL oracle can rebuild it character-exactly."""
+    min 1), stride = RESIZE_STRIDE. The checksum is over the decimated
+    bytes' hex text so an ANSI-SQL oracle can rebuild it character-exactly."""
+    stride = RESIZE_STRIDE
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [

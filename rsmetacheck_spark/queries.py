@@ -892,7 +892,7 @@ def dd06_dup_groups(spark: SparkSession, sf: str) -> DataFrame:
     pairs = dd02_minhash_lsh_pairs(spark, sf).select("id_a", "id_b")
 
     def ckpt(df: DataFrame, tag: str) -> DataFrame:
-        return _checkpoint(df, f"dd06_{tag}", sf if tag == "cc_edges" else None)
+        return _checkpoint(df, f"dd06_{tag}")
 
     return _checkpoint(largestar_components(pairs, ckpt), "dd06_groups", sf)
 
@@ -1723,11 +1723,11 @@ ORDER BY cos_sim DESC, vec_id ASC LIMIT {ANN_K}
 # not the full corpus) + multimodal feature plumbing (rows-only check)
 # ---------------------------------------------------------------------------
 
-def _hyperplanes(n_planes: int = 6, dim: int = 64, seed: int = 77):
+def _hyperplanes(n_planes: int = 6, seed: int = 77):
     import numpy as np
 
     rng = np.random.RandomState(seed)
-    return rng.randn(n_planes, dim).round(6).tolist()
+    return rng.randn(n_planes, _EMB_DIM).round(6).tolist()
 
 
 def _bucket_exprs(vcol: str, n_planes: int = 6, seed: int = 77) -> tuple[str, str]:
@@ -3452,8 +3452,14 @@ def sim07_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
     # vec_ids are the codebook seeds, seeds[0] (the smallest id — vec 0
     # in the testdata) doubles as the query, and dim comes from its
     # length. Three separate actions here cost three full scans per
-    # plan build.
+    # plan build. Fewer than KC vectors give a smaller codebook (the
+    # oracle's `LIMIT KC` seeds); none give an empty result.
     seeds = e.orderBy("vec_id").limit(_PQ_KC).collect()
+    if not seeds:
+        return e.selectExpr(
+            "vec_id", "'' AS code_str", "CAST(0 AS bigint) AS approx_dist"
+        ).where("false")
+    kc = len(seeds)
     q = list(seeds[0].qv)  # query = smallest vec_id
     dim = len(q)
     assert dim % _PQ_SUB == 0, (dim, _PQ_SUB)
@@ -3470,7 +3476,7 @@ def sim07_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
             sum(
                 (q[s * sd + j] - book[s][c][j]) ** 2 for j in range(sd)
             )
-            for c in range(_PQ_KC)
+            for c in range(kc)
         ]
         for s in range(_PQ_SUB)
     ]
@@ -3485,7 +3491,7 @@ def sim07_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
     # exact, so the oracle equivalence is unaffected.
     from pyspark.sql.functions import pandas_udf
 
-    book_rows = [[book[s][c] for c in range(_PQ_KC)] for s in range(_PQ_SUB)]
+    book_rows = [[book[s][c] for c in range(kc)] for s in range(_PQ_SUB)]
 
     @pandas_udf("array<long>")
     def _pq_encode(qv: pd.Series) -> pd.Series:

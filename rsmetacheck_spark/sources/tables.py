@@ -28,33 +28,3 @@ def write_table(
     with open(os.path.join(path, "_manifest.json"), "w") as fh:
         json.dump({"snapshot": snapshot, "partition_by": list(partition_by)}, fh)
     return snapshot
-
-
-def write_bucketed(
-    df: DataFrame, table: str, path: str, key: str,
-    buckets: int = 8, sort: bool = True,
-) -> None:
-    """Bucketed write: rows co-locate by hash(key) into a fixed bucket
-    count, so a join or aggregation keyed on `key` between tables with
-    the SAME bucketing needs NO Exchange — the shuffle was paid once at
-    write time and amortizes over every subsequent query. This is the
-    100 TB pattern for fact-fact joins that recur (near-dup pair
-    verification against a signature table, incremental-dedup probes
-    against a band index): bucket both sides at ingest, join shuffle-
-    free forever after. sortBy(key) additionally pre-sorts within each
-    bucket so sort-merge joins skip their sort. Requires saveAsTable
-    (bucketing metadata lives in the catalog, not the parquet files);
-    the explicit path keeps data placement under caller control.
-    tests/test_bucketed_join.py asserts the zero-Exchange plan."""
-    w = (
-        df.write.format("parquet").mode("overwrite")
-        .option("path", path).bucketBy(buckets, key)
-    )
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
-def read_manifest(path: str) -> dict:
-    with open(os.path.join(path, "_manifest.json")) as fh:
-        return json.load(fh)

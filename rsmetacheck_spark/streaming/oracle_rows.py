@@ -45,10 +45,9 @@ def _as_stream_dir(path: str) -> str:
     return _STREAM_DIRS[path]
 
 
-def _run_to_memory(
-    stream_df: DataFrame, mode: str, shuffle_partitions: int = 8
-) -> str:
-    """Run the stream to completion into a memory sink.
+def _run_to_memory(stream_df: DataFrame, mode: str) -> str:
+    """Run the stream to completion into a memory sink, at 8 shuffle
+    partitions.
 
     Stateful streaming fans its state store out per shuffle partition
     (one state dir + per-batch commit per partition), so at these
@@ -63,7 +62,7 @@ def _run_to_memory(
     spark = stream_df.sparkSession
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
-    spark.conf.set(key, str(shuffle_partitions))
+    spark.conf.set(key, "8")
     try:
         name = f"st_sink_{uuid.uuid4().hex[:12]}"
         q = (

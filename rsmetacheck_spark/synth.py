@@ -96,27 +96,31 @@ def _zz_word(rng: np.random.RandomState) -> str:
     )
 
 
-def zz_corpus(seed: int = 7, n_words: int = 4000) -> list[str]:
+def zz_corpus() -> list[str]:
     """Fixed gibberish corpus used to train the langid model's zz class."""
-    rng = np.random.RandomState(seed)
-    return [_zz_word(rng) for _ in range(n_words)]
+    rng = np.random.RandomState(7)
+    return [_zz_word(rng) for _ in range(4000)]
 
 
-def _sentence(rng: np.random.RandomState, lang: str, stop_frac: float = 0.4) -> str:
+# share of stopwords in generated prose
+STOP_FRAC = 0.4
+
+
+def _sentence(rng: np.random.RandomState, lang: str) -> str:
     n = rng.randint(5, 16)
     sw, cw = TH.STOPWORDS[lang], CONTENT_WORDS[lang]
     words = [
-        sw[rng.randint(len(sw))] if rng.rand() < stop_frac else cw[rng.randint(len(cw))]
+        sw[rng.randint(len(sw))] if rng.rand() < STOP_FRAC else cw[rng.randint(len(cw))]
         for _ in range(n)
     ]
     words[0] = words[0].capitalize()
     return " ".join(words) + "."
 
 
-def _prose(rng: np.random.RandomState, lang: str, n_words: int, stop_frac: float = 0.4) -> str:
+def _prose(rng: np.random.RandomState, lang: str, n_words: int) -> str:
     paras, words_done, sents = [], 0, []
     while words_done < n_words:
-        s = _sentence(rng, lang, stop_frac)
+        s = _sentence(rng, lang)
         sents.append(s)
         words_done += len(s.split())
         if len(sents) >= rng.randint(3, 7):
@@ -242,18 +246,13 @@ def gen_pages(n_docs: int, seed: int = 42, with_class: bool = False) -> pd.DataF
     return df
 
 
-def spark_pages_parquet(
-    spark, n_docs: int, seed: int = 42, cache_dir: str | None = None,
-    partitions: int = 64,
-) -> str:
+def spark_pages_parquet(spark, n_docs: int, seed: int = 42) -> str:
     """Distributed generation of the same deterministic rows (gen_row is a
     pure function of (seed, i), so Spark-parallel == pandas-serial). Cached
-    as parquet; returns the path."""
+    as parquet under the repo's `.cache/`; returns the path."""
     import pandas as _pd
 
-    cache_dir = cache_dir or os.path.join(
-        os.path.dirname(os.path.dirname(__file__)), ".cache"
-    )
+    cache_dir = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
     os.makedirs(cache_dir, exist_ok=True)
     path = os.path.join(cache_dir, f"pages_n{n_docs}_s{seed}_spark.parquet")
     if os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -266,18 +265,8 @@ def spark_pages_parquet(
             yield out
 
     (
-        spark.range(0, n_docs, 1, partitions)
+        spark.range(0, n_docs, 1, 64)
         .mapInPandas(gen, "url string, warc_ts timestamp, html binary, text string, lang string")
         .write.mode("overwrite").parquet(path)
     )
-    return path
-
-
-def pages_parquet(n_docs: int, seed: int = 42, cache_dir: str | None = None) -> str:
-    """Materialize (cached) pages parquet; returns the file path."""
-    cache_dir = cache_dir or os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
-    os.makedirs(cache_dir, exist_ok=True)
-    path = os.path.join(cache_dir, f"pages_n{n_docs}_s{seed}.parquet")
-    if not os.path.exists(path):
-        gen_pages(n_docs, seed).to_parquet(path, index=False)
     return path

@@ -5,12 +5,19 @@ from __future__ import annotations
 from rsmetacheck_spark.operators.multimodal import (
     decode_stub,
     extract_features,
-    synth_media,
+    synth_media_from_docs,
 )
+
+DOCS = "/root/testdata/sf0.001/documents.parquet"
+
+
+def _media(spark, n):
+    docs = spark.read.parquet(DOCS).filter(f"doc_id < {n}")
+    return synth_media_from_docs(docs)
 
 
 def test_media_features_end_to_end(spark):
-    feats = extract_features(synth_media(spark, n=60)).collect()
+    feats = extract_features(_media(spark, 60)).collect()
     assert len(feats) == 60
     by_id = {r.media_id: r for r in feats}
     assert set(by_id) == set(range(60))
@@ -25,8 +32,8 @@ def test_media_features_end_to_end(spark):
 
 
 def test_media_determinism(spark):
-    a = sorted((r.media_id, r.sha256) for r in extract_features(synth_media(spark, n=20)).collect())
-    b = sorted((r.media_id, r.sha256) for r in extract_features(synth_media(spark, n=20)).collect())
+    a = sorted((r.media_id, r.sha256) for r in extract_features(_media(spark, 20)).collect())
+    b = sorted((r.media_id, r.sha256) for r in extract_features(_media(spark, 20)).collect())
     assert a == b
 
 
@@ -69,7 +76,7 @@ def test_media_from_docs_features(spark):
         payload_hex_chain,
         synth_media_from_docs,
     )
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(DOCS)
     feats = {r.media_id: r for r in
              extract_features(synth_media_from_docs(docs)).collect()}
     assert len(feats) == docs.count()
@@ -83,7 +90,7 @@ def test_sample_frames_fanout_and_content(spark):
         FRAME_LEN, N_FRAMES, payload_hex_chain, sample_frames,
         synth_media_from_docs,
     )
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(DOCS)
     media = synth_media_from_docs(docs).filter("kind = 'video'")
     frames = sample_frames(media).collect()
     by_id = {}

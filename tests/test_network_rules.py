@@ -16,11 +16,12 @@ from pyspark.sql import functions as F
 from rsmetacheck_spark.evidence_net import (
     ST_CODES,
     ev10_network_rules,
+    extract_urls,
     ok_p008,
     ok_p011,
     ok_p015,
+    url_is_valid,
 )
-from rsmetacheck_spark.functions.scalars import extract_urls, url_is_valid
 
 # Expected accessibility per status, straight from the reference:
 # p008.py:47 (2xx or 301), p011.py:22 (< 400), p015.py:40 (2xx, 301, 302).

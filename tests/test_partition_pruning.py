@@ -10,12 +10,13 @@ column it filters."""
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
 import pytest
 
-from rsmetacheck_spark.sources.tables import read_manifest, write_table
+from rsmetacheck_spark.sources.tables import write_table
 
 
 @pytest.fixture(scope="module")
@@ -72,7 +73,8 @@ def test_data_column_predicate_is_pushed(spark, curated):
 
 def test_manifest_records_partitioning(curated):
     path, snap, _ = curated
-    m = read_manifest(path)
+    with open(os.path.join(path, "_manifest.json")) as fh:
+        m = json.load(fh)
     assert m["snapshot"] == snap
     assert m["partition_by"] == ["lang"]
 

@@ -298,6 +298,31 @@ def test_sim07_matches_pq_reference(spark, vecs):
     assert len(overlap) >= 3, (sorted(overlap), exact, expect)
 
 
+def test_sim07_fewer_vectors_than_codebook_matches_oracle(spark, tmp_path):
+    """Fewer than KC (16) embeddings: the codebook is as many seeds as
+    there are vectors (the oracle's `LIMIT KC`), and no vectors give an
+    empty result — not an IndexError."""
+    import pyarrow.parquet as pq
+
+    from rsmetacheck_spark.queries import _sql_sim07, sim07_pq_adc_topk
+    from tools.check_oracle import norm_rows
+
+    full = pq.read_table(f"{SF}/embeddings.parquet").sort_by("vec_id")
+    for n in (0, 1, 5):
+        sf = tmp_path / f"n{n}"
+        sf.mkdir()
+        pq.write_table(full.slice(0, n), sf / "embeddings.parquet")
+        got = sim07_pq_adc_topk(spark, str(sf))
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'"
+        )
+        rel = con.sql(_sql_sim07())
+        want = norm_rows([d[0] for d in rel.description], rel.fetchall())
+        assert norm_rows(got.columns, [tuple(r) for r in got.collect()]) == want, n
+        assert len(want[1]) == max(n - 1, 0)
+
+
 def _toks(text: str) -> list[str]:
     import re
 
